@@ -7,7 +7,7 @@ pipeline, graceful shutdown).
     python -m etl_wikipedia_updates_spark ingest --replay DIR --sink DIR
         [--max-rows N]            # file-replay ingest with retention (R11-R14)
     python -m etl_wikipedia_updates_spark dedup-ingest --replay DIR --sink DIR
-        [--mode doc|quality|verified|embedding|embedding-verified|
+        [--mode doc|quality|verified|span|embedding|embedding-verified|
                 decontam|curate] [--decontam-mode shingles|spans]
         [--compact-every N]       # near-dup dedup / curation at ingest
     python -m etl_wikipedia_updates_spark index build|append|query|stats
@@ -416,54 +416,39 @@ def cmd_dedup_ingest(args) -> int:
 
     from etl_wikipedia_updates_spark.sources.replay import read_replay_stream
     from etl_wikipedia_updates_spark.streaming.decontam import (
-        ingest_with_decontam,
+        MODES,
+        ingest_with_mode,
     )
     from etl_wikipedia_updates_spark.streaming.ingest import read_sink
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        ingest_with_embedding_neardup,
-        ingest_with_neardup,
-        ingest_with_quality_neardup,
-        ingest_with_span_neardup,
-        ingest_with_verified_embedding_neardup,
-        ingest_with_verified_neardup,
-    )
+    from etl_wikipedia_updates_spark.streaming.neardup import SPAN_DEDUP
     from etl_wikipedia_updates_spark.tables import load_table
 
+    spec = MODES[args.mode]
+    # flag -> whether a mode runs the stage it configures. A stage flag
+    # must apply or fail loudly, never no-op (a privacy control above
+    # all).
+    stage_flags = {
+        "bench": lambda m: m.veto,
+        "decontam_mode": lambda m: m.veto,
+        "redact_pii": lambda m: m.redact,
+        "temperature_mix": lambda m: m.mix,
+        "seed_span_store": lambda m: m.dedup is SPAN_DEDUP,
+    }
+    for flag, runs in stage_flags.items():
+        if getattr(args, flag) not in (None, False) and not runs(spec):
+            need = " or ".join(m for m, s in MODES.items() if runs(s))
+            print(
+                f"--{flag.replace('_', '-')} configures a stage --mode "
+                f"{args.mode} does not run: it requires --mode {need}",
+                file=sys.stderr,
+            )
+            return 2
     spark = _spark()
-    table = (
-        "embeddings"
-        if args.mode in ("embedding", "embedding-verified")
-        else "documents"
-    )
-    if getattr(args, "seed_span_store", None) and args.mode != "span":
-        print(
-            "--seed-span-store seeds the span-veto store: it requires "
-            f"--mode span (got --mode {args.mode})",
-            file=sys.stderr,
-        )
-        return 2
-    if getattr(args, "redact_pii", False) and args.mode != "curate":
-        # a privacy control must apply or fail loudly, never no-op
-        print(
-            "--redact-pii is a curation stage: it requires --mode curate "
-            f"(got --mode {args.mode})",
-            file=sys.stderr,
-        )
-        return 2
-    if getattr(args, "temperature_mix", False) and args.mode != "curate":
-        print(
-            "--temperature-mix is a curation stage: it requires --mode "
-            f"curate (got --mode {args.mode})",
-            file=sys.stderr,
-        )
-        return 2
-    schema = load_table(spark, args.sf_dir, table).schema
+    schema = load_table(spark, args.sf_dir, spec.table).schema
     stream = read_replay_stream(spark, args.replay, schema)
-    if args.mode in ("decontam", "curate"):
-        from etl_wikipedia_updates_spark.streaming.decontam import (
-            ingest_with_full_curation,
-        )
-
+    bench = None
+    opts = {}
+    if spec.veto:
         # held-out benchmark: an explicit parquet path, else the
         # CONTAM_BENCH_SOURCE slice of the static documents table
         # (the same convention the batch contamination query
@@ -481,112 +466,89 @@ def cmd_dedup_ingest(args) -> int:
             bench = load_table(spark, args.sf_dir, "documents").filter(
                 F.col("source") == CONTAM_BENCH_SOURCE
             )
-        start_b = (
-            ingest_with_decontam
-            if args.mode == "decontam"
-            else ingest_with_full_curation
+        opts["exclude_self"] = args.bench is None
+        opts["decontam_mode"] = args.decontam_mode or "shingles"
+    if args.redact_pii:
+        opts["redact_pii"] = True
+    if args.temperature_mix:
+        from etl_wikipedia_updates_spark.plans.northstar import (
+            static_temp_rates,
         )
-        extra = {}
-        if args.mode == "decontam":
-            extra["mode"] = args.decontam_mode
-        else:  # curate: same veto rule dial, curation param name
-            extra["decontam_mode"] = args.decontam_mode
-        if args.redact_pii:
-            extra["redact_pii"] = True
-        if getattr(args, "temperature_mix", False):
-            from etl_wikipedia_updates_spark.plans.northstar import (
-                static_temp_rates,
-            )
 
-            # stream-static model: rates fit once from the declared
-            # static table; the stream only applies the thresholds
-            extra["temp_rates"] = static_temp_rates(
-                load_table(spark, args.sf_dir, "documents").select(
-                    "source", "n_chars"
-                )
+        # stream-static model: rates fit once from the declared
+        # static table; the stream only applies the thresholds
+        opts["temp_rates"] = static_temp_rates(
+            load_table(spark, args.sf_dir, "documents").select(
+                "source", "n_chars"
             )
-        q = start_b(
-            stream,
-            bench,
-            args.sink,
-            args.checkpoint or args.sink + "_ckpt",
-            compact_every=args.compact_every,
-            exclude_self=args.bench is None,
-            **extra,
         )
-    else:
-        if getattr(args, "seed_span_store", None):
-            import os as _os
+    if args.seed_span_store:
+        import os as _os
 
-            from etl_wikipedia_updates_spark.streaming.neardup import (
-                seed_span_store_from,
-                seeded_from,
+        from etl_wikipedia_updates_spark.streaming.neardup import (
+            seed_span_store_from,
+            seeded_from,
+        )
+
+        # checkpointed-resume friendliness: re-running the same
+        # seeded command must resume, not crash — the durable
+        # sidecar marker (which survives store compaction, unlike
+        # snapshot meta) says whether THIS store already seeded
+        # the sink; paths are normalized so a trailing slash or
+        # relative form still matches. Any other prior state is a
+        # clean usage error, as are a missing / wrong-kind /
+        # wrong-span-params source store (r17 review).
+        marker = seeded_from(args.sink)
+        want = _os.path.normpath(_os.path.abspath(args.seed_span_store))
+        if marker is not None and marker.get("store_root") == want:
+            print(
+                f"span store already seeded (from {want} "
+                f"v{marker.get('version')}); resuming"
+            )
+            # root-only matching can mask drift: the SOURCE store
+            # may have advanced (a --merge published v2) since the
+            # seed. Resuming is still correct — the seed is
+            # creation-time state — but say so loudly instead of
+            # letting the print read as "seeded with the newest
+            # release" (r17 advice).
+            from etl_wikipedia_updates_spark.streaming.snapshot import (
+                SnapshotTable as _ST,
             )
 
-            # checkpointed-resume friendliness: re-running the same
-            # seeded command must resume, not crash — the durable
-            # sidecar marker (which survives store compaction, unlike
-            # snapshot meta) says whether THIS store already seeded
-            # the sink; paths are normalized so a trailing slash or
-            # relative form still matches. Any other prior state is a
-            # clean usage error, as are a missing / wrong-kind /
-            # wrong-span-params source store (r17 review).
-            marker = seeded_from(args.sink)
-            want = _os.path.normpath(_os.path.abspath(args.seed_span_store))
-            if marker is not None and marker.get("store_root") == want:
+            # advisory only: a broken SOURCE store must not stop a
+            # healthy sink from resuming (r18 review — resume never
+            # touched the source store before this warning existed)
+            try:
+                _cur = _ST(args.seed_span_store).current_version()
+            except (RuntimeError, OSError, ValueError):
+                _cur = None
+            if _cur is not None and _cur != marker.get("version"):
                 print(
-                    f"span store already seeded (from {want} "
-                    f"v{marker.get('version')}); resuming"
+                    f"WARNING: source span store is now at v{_cur} "
+                    f"but this sink was seeded from "
+                    f"v{marker.get('version')}; the newer spans are "
+                    "NOT in this sink's store (re-seed a fresh sink "
+                    "to pick them up)",
+                    file=sys.stderr,
                 )
-                # root-only matching can mask drift: the SOURCE store
-                # may have advanced (a --merge published v2) since the
-                # seed. Resuming is still correct — the seed is
-                # creation-time state — but say so loudly instead of
-                # letting the print read as "seeded with the newest
-                # release" (r17 advice).
-                from etl_wikipedia_updates_spark.streaming.snapshot import (
-                    SnapshotTable as _ST,
+        else:
+            try:
+                n = seed_span_store_from(
+                    spark, args.sink, args.seed_span_store
                 )
-
-                # advisory only: a broken SOURCE store must not stop a
-                # healthy sink from resuming (r18 review — resume never
-                # touched the source store before this warning existed)
-                try:
-                    _cur = _ST(args.seed_span_store).current_version()
-                except (RuntimeError, OSError, ValueError):
-                    _cur = None
-                if _cur is not None and _cur != marker.get("version"):
-                    print(
-                        f"WARNING: source span store is now at v{_cur} "
-                        f"but this sink was seeded from "
-                        f"v{marker.get('version')}; the newer spans are "
-                        "NOT in this sink's store (re-seed a fresh sink "
-                        "to pick them up)",
-                        file=sys.stderr,
-                    )
-            else:
-                try:
-                    n = seed_span_store_from(
-                        spark, args.sink, args.seed_span_store
-                    )
-                except (RuntimeError, FileNotFoundError, ValueError) as e:
-                    print(str(e), file=sys.stderr)
-                    return 2
-                print(f"seeded {n} span hashes from {args.seed_span_store}")
-        start = {
-            "doc": ingest_with_neardup,
-            "quality": ingest_with_quality_neardup,
-            "verified": ingest_with_verified_neardup,
-            "span": ingest_with_span_neardup,
-            "embedding": ingest_with_embedding_neardup,
-            "embedding-verified": ingest_with_verified_embedding_neardup,
-        }[args.mode]
-        q = start(
-            stream,
-            args.sink,
-            args.checkpoint or args.sink + "_ckpt",
-            compact_every=args.compact_every,
-        )
+            except (RuntimeError, FileNotFoundError, ValueError) as e:
+                print(str(e), file=sys.stderr)
+                return 2
+            print(f"seeded {n} span hashes from {args.seed_span_store}")
+    q = ingest_with_mode(
+        args.mode,
+        stream,
+        bench,
+        args.sink,
+        args.checkpoint or args.sink + "_ckpt",
+        compact_every=args.compact_every,
+        **opts,
+    )
     finished = q.awaitTermination(args.timeout)
     if not finished:
         q.stop()
@@ -602,54 +564,29 @@ def cmd_maintain(args) -> int:
     /root/reference/pipeline.py:41-51), run OUT of band here because
     at scale maintenance is a scheduled job, not trigger-path work:
     fold the data sink's batch appends into a compacted snapshot
-    version, optionally fold the neardup bucket store and the rollup
+    version, every state store a curation mode keeps under it (bucket,
+    shingle, vector and quarantine stores), and optionally the rollup
     partials. Each fold is the same crash-safe SnapshotTable /
     swap publish the streaming path uses, so running this against a
     live sink is safe (replay grace horizons are preserved). Prints
     one JSON line of what happened."""
     import json
 
+    from etl_wikipedia_updates_spark.streaming.decontam import STORES
     from etl_wikipedia_updates_spark.streaming.ingest import (
         compact_rollup,
         compact_sink,
     )
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        bucket_store_path,
-        compact_bucket_store,
-        compact_shingle_store,
-        compact_vector_store,
-        shingle_store_path,
-        vector_store_path,
-    )
+    from etl_wikipedia_updates_spark.streaming.neardup import compact_store
 
     spark = _spark()
     out: dict = {}
     out["sink"] = compact_sink(spark, args.sink, args.target_files)
-    if os.path.isdir(bucket_store_path(args.sink)):
-        folded = compact_bucket_store(
-            spark, args.sink, target_files=args.target_files
-        )
-        out["bucket_store"] = folded if folded else "nothing to fold"
-    if os.path.isdir(shingle_store_path(args.sink)):
-        folded = compact_shingle_store(
-            spark, args.sink, target_files=args.target_files
-        )
-        out["shingle_store"] = folded if folded else "nothing to fold"
-    if os.path.isdir(vector_store_path(args.sink)):
-        folded = compact_vector_store(
-            spark, args.sink, target_files=args.target_files
-        )
-        out["vector_store"] = folded if folded else "nothing to fold"
-    from etl_wikipedia_updates_spark.streaming.decontam import (
-        compact_contam_store,
-        contam_store_path,
-    )
-
-    if os.path.isdir(contam_store_path(args.sink)):
-        folded = compact_contam_store(
-            spark, args.sink, target_files=args.target_files
-        )
-        out["contam_store"] = folded if folded else "nothing to fold"
+    for name, dirname in STORES.items():
+        path = os.path.join(args.sink, dirname)
+        if os.path.isdir(path):
+            folded = compact_store(spark, path, target_files=args.target_files)
+            out[name] = folded if folded else "nothing to fold"
     if args.rollup:
         compact_rollup(spark, args.rollup)
         out["rollup"] = "compacted"
@@ -768,6 +705,11 @@ def cmd_dashboard(args) -> int:
 
 
 def main(argv: list[str] | None = None) -> int:
+    from etl_wikipedia_updates_spark.streaming.decontam import (
+        DECONTAM_MODES,
+        MODES,
+    )
+
     sf_default = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     p = argparse.ArgumentParser(prog="etl_wikipedia_updates_spark")
     sub = p.add_subparsers(dest="cmd", required=True)
@@ -985,29 +927,17 @@ def main(argv: list[str] | None = None) -> int:
         help="file-replay ingest with curation at ingest "
         "(doc: MinHash bands; quality: repetition gate + MinHash "
         "bands; verified: bands nominate + sketch-Jaccard decides; "
+        "span: exact SPAN_W-token span veto against earlier docs; "
         "embedding: sign-bucket LSH; embedding-verified: sign "
         "buckets nominate + exact cosine decides; decontam: "
-        "benchmark shingle veto with quarantine audit table; "
+        "benchmark veto with quarantine audit table; "
         "curate: quality gate + decontam + near-dup dedup in one "
         "pass)",
     )
     ded.add_argument("--replay", required=True)
     ded.add_argument("--sink", required=True)
     ded.add_argument("--checkpoint")
-    ded.add_argument(
-        "--mode",
-        choices=[
-            "doc",
-            "quality",
-            "verified",
-            "span",
-            "embedding",
-            "embedding-verified",
-            "decontam",
-            "curate",
-        ],
-        default="doc",
-    )
+    ded.add_argument("--mode", choices=list(MODES), default="doc")
     ded.add_argument("--sf-dir", default=sf_default)
     ded.add_argument(
         "--bench",
@@ -1024,12 +954,12 @@ def main(argv: list[str] | None = None) -> int:
     )
     ded.add_argument(
         "--decontam-mode",
-        choices=["shingles", "spans"],
-        default="shingles",
-        help="decontam/curate: the veto rule — 'shingles' "
-        "(>= CONTAM_MIN_SHARED shared shingles, the contamination "
-        "rule) or 'spans' (one exact SPAN_W-token run, the "
-        "span_decontam rule)",
+        choices=list(DECONTAM_MODES),
+        default=None,
+        help="decontam/curate: the veto rule — 'shingles' (the "
+        "default: >= CONTAM_MIN_SHARED shared shingles, the "
+        "contamination rule) or 'spans' (one exact SPAN_W-token run, "
+        "the span_decontam rule)",
     )
     ded.add_argument(
         "--redact-pii", action="store_true",
@@ -1046,13 +976,15 @@ def main(argv: list[str] | None = None) -> int:
     ded.add_argument("--timeout", type=int, default=600)
     ded.add_argument(
         "--compact-every", type=int, default=None,
-        help="fold the LSH bucket store every N batches",
+        help="fold the sink's state stores (LSH bucket, shingle, vector "
+        "and quarantine stores) every N batches",
     )
 
     mnt = sub.add_parser(
         "maintain",
-        help="one out-of-band maintenance pass: compact the sink (and "
-        "its neardup bucket store if present; optionally a rollup dir)",
+        help="one out-of-band maintenance pass: compact the sink and "
+        "every state store under it (LSH bucket, shingle, vector and "
+        "quarantine stores); optionally a rollup dir",
     )
     mnt.add_argument("--sink", required=True)
     mnt.add_argument("--target-files", type=int, default=4)

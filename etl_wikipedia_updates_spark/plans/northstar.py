@@ -3652,7 +3652,7 @@ def span_decontam(spark: SparkSession, sf_dir: str) -> DataFrame:
     counterpart (streaming/decontam.py) vetoes on shingle OVERLAP —
     the `contamination` rule; this operator is the exact-substring
     complement, and its broadcast span set drops into the same
-    stream-static join shape (ingest_with_decontam(mode='spans'))."""
+    stream-static join shape (dedup-ingest --decontam-mode spans)."""
     docs = spread(load_table(spark, sf_dir, "documents"))
     # the bench branch re-runs the span Generate over the UN-spread
     # table: its source filter pushes to the parquet scan, so it only

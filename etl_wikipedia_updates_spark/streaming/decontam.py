@@ -1,8 +1,21 @@
-"""Ingest-time benchmark decontamination: stream-static veto in two
-modes — shingle OVERLAP (the batch `contamination` rule) and, since
-r16, exact-substring SPANS (the batch `span_decontam` rule: one
-verbatim SPAN_W-token run vetoes; same _span_occurrences machinery,
-so stream and batch agree on what a span is).
+"""The streaming curation modes, and the benchmark-decontamination
+stage they share.
+
+``MODES`` is the one table of what a curation mode is: the table it
+replays, its id column, and which stages it runs (``Mode``). One
+per-batch driver (``ingest_batch``) runs any mode's stages in order,
+one batch twin (``batch_keep``) runs the same stages over a whole
+frame with an empty dedup store, and one starter (``ingest_with_mode``)
+runs the driver under foreachBatch. Exactly-once comes from the
+replayable source plus the idempotent per-batch-id dirs every output
+lands in (append_batch).
+
+The veto stage: ingest-time benchmark decontamination, a
+stream-static veto in two modes — shingle OVERLAP (the batch
+`contamination` rule) and, since r16, exact-substring SPANS (the
+batch `span_decontam` rule: one verbatim SPAN_W-token run vetoes; same
+_span_occurrences machinery, so stream and batch agree on what a span
+is).
 
 The batch `contamination` query (plans/northstar.py) audits a corpus
 at rest for benchmark n-gram overlap; a training-data pipeline also
@@ -41,36 +54,29 @@ all beyond the per-doc aggregate of matched shingles.
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
+from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import DataFrame, Window as W
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
+from pyspark.sql.streaming import StreamingQuery
 
 from etl_wikipedia_updates_spark.operators import text as T
 from etl_wikipedia_updates_spark.plans.northstar import (
     CONTAM_MIN_SHARED,
     SHINGLE_DF_CAP,
 )
-from etl_wikipedia_updates_spark.streaming.ingest import append_batch
-from etl_wikipedia_updates_spark.streaming.neardup import _compact_store
+from etl_wikipedia_updates_spark.streaming import neardup as N
+from etl_wikipedia_updates_spark.streaming.ingest import (
+    append_batch,
+    start_foreach_batch,
+)
 
 CONTAM_DIRNAME = "_contaminated"  # _-prefixed: invisible to sink readers
 
 
 def contam_store_path(sink_path: str) -> str:
     return os.path.join(sink_path, CONTAM_DIRNAME)
-
-
-def compact_contam_store(
-    spark: SparkSession,
-    sink_path: str,
-    target_files: int = 4,
-    below: int | None = None,
-) -> dict | None:
-    """Fold the quarantine table (see neardup._compact_store)."""
-    return _compact_store(
-        spark, contam_store_path(sink_path), target_files, below
-    )
 
 
 def bench_shingles(
@@ -201,151 +207,108 @@ def _mode_fns(mode: str):
         ) from None
 
 
-def decontam_ingest_batch(
-    batch_df: DataFrame,
-    bench_sh: DataFrame,
-    sink_path: str,
-    batch_id: int,
-    compact_every: int | None = None,
-    exclude_self: bool = True,
-    mode: str = "shingles",
-) -> None:
-    """One micro-batch of decontaminating ingest: clean rows append to
-    the sink, contaminated verdicts append to the quarantine table —
-    both under this batch's idempotent dir, so an at-least-once replay
-    overwrites its own first attempt on both sides. ``bench_sh`` must
-    be the ``mode``-matching static frame (bench_shingles output for
-    'shingles', bench_spans for 'spans')."""
-    spark = batch_df.sparkSession
-    verdicts = _mode_fns(mode)[1](
-        batch_df, bench_sh, exclude_self=exclude_self
-    ).persist()
+# --- the curation modes: one table, one per-batch driver, one starter --------
+@dataclass(frozen=True)
+class Mode:
+    """One streaming curation mode (``dedup-ingest --mode``): the table
+    it replays, that table's id column, and the stages it runs, always
+    in this order:
+
+    (0) ``redact`` — PII redaction (the shared plans.corpus.pii_redact
+        expression the pii_scrub audit certifies), on with
+        ``redact_pii=True``. It runs FIRST so every downstream signal
+        (quality ratios, shingles, near-dup signatures) sees the text a
+        release would ship.
+    (1) ``quality`` — the Gopher-style repetition gate
+        (plans.northstar.quality_keep), stateless per doc.
+    (2) ``veto`` — the benchmark veto against a static benchmark frame
+        (``decontam_mode`` picks the shingle-overlap or exact-span
+        rule), its verdicts quarantined in ``_contaminated``.
+    (3) ``dedup`` — the near-dup tail against the accumulating stores
+        (neardup.Dedup).
+    (4) ``mix`` — temperature membership on the sink append, on with
+        ``temp_rates``: a STATIC (source, rate_ppm) frame
+        (plans.northstar.static_temp_rates over a declared corpus or
+        prior snapshot, NEVER the unbounded stream). Mix-dropped docs
+        still enter the dedup stores and shadow their later near-dups,
+        as in the release pipeline's dedup-before-mix order.
+
+    The order is cheap-to-expensive: quality needs no state, the veto
+    joins a tiny broadcast, and only the survivors of both pay the
+    signature aggregation and store join. Corpus-global budget FITTING
+    stays release-time/static; a stream only APPLIES precomputed
+    thresholds."""
+
+    table: str
+    id_col: str
+    redact: bool = False
+    quality: bool = False
+    veto: bool = False
+    mix: bool = False
+    dedup: N.Dedup | None = None
+
+
+MODES = {
+    "doc": Mode("documents", "doc_id", dedup=N.MINHASH_DEDUP),
+    "quality": Mode(
+        "documents", "doc_id", quality=True, dedup=N.MINHASH_DEDUP
+    ),
+    "verified": Mode("documents", "doc_id", dedup=N.VERIFIED_DEDUP),
+    "span": Mode("documents", "doc_id", dedup=N.SPAN_DEDUP),
+    "embedding": Mode("embeddings", "vec_id", dedup=N.EMBEDDING_DEDUP),
+    "embedding-verified": Mode(
+        "embeddings", "vec_id", dedup=N.EMBEDDING_VERIFIED_DEDUP
+    ),
+    "decontam": Mode("documents", "doc_id", veto=True),
+    "curate": Mode(
+        "documents",
+        "doc_id",
+        redact=True,
+        quality=True,
+        veto=True,
+        mix=True,
+        dedup=N.MINHASH_DEDUP,
+    ),
+}
+
+# Every state store a mode keeps under its sink, by the name
+# maintenance reports it under.
+STORES = {
+    "bucket_store": N.BUCKETS_DIRNAME,
+    "shingle_store": N.SHINGLES_DIRNAME,
+    "vector_store": N.VECTORS_DIRNAME,
+    "contam_store": CONTAM_DIRNAME,
+}
+
+
+def _mode(mode: str, bench, redact_pii: bool, temp_rates) -> Mode:
+    """The table entry for ``mode``. A stage setting the mode does not
+    run is refused, never ignored: a privacy control or a mix that
+    silently no-ops ships the wrong corpus with a clean exit."""
     try:
-        survivors = batch_df.join(
-            verdicts.select("doc_id"), "doc_id", "left_anti"
-        )
-        append_batch(survivors, sink_path, batch_id)
-        append_batch(verdicts, contam_store_path(sink_path), batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_contam_store(spark, sink_path, below=batch_id)
-    finally:
-        verdicts.unpersist()
+        spec = MODES[mode]
+    except KeyError:
+        raise ValueError(
+            f"unknown curation mode {mode!r}; expected one of {sorted(MODES)}"
+        ) from None
+    if spec.veto and bench is None:
+        raise ValueError(f"mode {mode!r} runs the benchmark veto: pass a bench")
+    for setting, given, runs in (
+        ("a bench", bench is not None, spec.veto),
+        ("redact_pii", redact_pii, spec.redact),
+        ("temp_rates", temp_rates is not None, spec.mix),
+    ):
+        if given and not runs:
+            raise ValueError(
+                f"mode {mode!r} does not run the stage {setting} configures"
+            )
+    return spec
 
 
-class _UnpersistOnTermination(StreamingQueryListener):
-    """Release a stream's persisted static frame when the query ends.
-
-    The decontam streams persist the benchmark shingle frame ONCE per
-    stream (outside the per-batch handler); without a termination hook
-    the cache entry outlived its stream and leaked across restarted
-    curation streams in the same session. The listener unpersists on
-    the owning query's termination event and deregisters itself; it is
-    also invoked directly (idempotently, via the once-flag) if the
-    query finished before the listener could be registered — the
-    availableNow-on-tiny-data race."""
-
-    def __init__(self, spark: SparkSession, query_id: str, df: DataFrame):
-        self._spark = spark
-        self._qid = query_id
-        self._df = df
-        self._done = False
-
-    def release(self) -> None:
-        if self._done:
-            return
-        self._done = True
-        try:
-            self._df.unpersist()
-        finally:
-            self._spark.streams.removeListener(self)
-
-    def onQueryStarted(self, event) -> None:
-        pass
-
-    def onQueryProgress(self, event) -> None:
-        pass
-
-    def onQueryIdle(self, event) -> None:
-        pass
-
-    def onQueryTerminated(self, event) -> None:
-        if str(event.id) == self._qid:
-            self.release()
-
-
-def _release_on_termination(query: StreamingQuery, df: DataFrame) -> None:
-    """Attach a termination-scoped unpersist for ``df`` to ``query``."""
-    spark = SparkSession.getActiveSession() or SparkSession.builder.getOrCreate()
-    listener = _UnpersistOnTermination(spark, str(query.id), df)
-    spark.streams.addListener(listener)
-    # The query may have terminated between start() and addListener —
-    # a terminated query never fires the event for late listeners, so
-    # release inline (release() is idempotent against a double fire).
-    if not query.isActive:
-        listener.release()
-
-
-def ingest_with_decontam(
-    stream: DataFrame,
-    bench_docs: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-    exclude_self: bool = True,
-    mode: str = "shingles",
-) -> StreamingQuery:
-    """Streamed documents -> benchmark-decontaminated sink, with the
-    contaminated verdicts quarantined beside it. ``bench_docs`` is the
-    static held-out corpus; its shingle set is built and persisted
-    ONCE, outside the per-batch handler, and unpersisted when the
-    stream terminates (a restarted curation stream rebuilds it — no
-    cache leak across streams). ``exclude_self`` as in
-    decontam_verdicts: True only when bench_docs is an id-shared
-    subset of the stream; False for an external benchmark.
-    ``mode``: 'shingles' (overlap veto — the `contamination` rule) or
-    'spans' (exact-substring veto — the `span_decontam` rule)."""
-    bench_sh = _mode_fns(mode)[0](bench_docs).persist()
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        decontam_ingest_batch(
-            batch_df, bench_sh, sink_path, batch_id,
-            compact_every=compact_every,
-            exclude_self=exclude_self,
-            mode=mode,
-        )
-
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    _release_on_termination(query, bench_sh)
-    return query
-
-
-def batch_decontam_keep(
-    docs: DataFrame,
-    bench_docs: DataFrame,
-    exclude_self: bool = True,
-    mode: str = "shingles",
-) -> DataFrame:
-    """The BATCH statement of the streaming rule (equivalence tests
-    and backfills): keep docs with no benchmark match. The operator
-    is stateless per doc, so the streamed sink equals this under ANY
-    batching — no arrival-order caveat needed."""
-    build, verdicts_fn = _mode_fns(mode)
-    drops = verdicts_fn(
-        docs, build(bench_docs), exclude_self=exclude_self
-    ).select("doc_id")
-    return docs.join(drops, "doc_id", "left_anti")
-
-
-# --- full per-doc curation: quality -> decontam -> near-dup dedup -------------
-def full_curation_ingest_batch(
+def ingest_batch(
+    mode: str,
     batch_df: DataFrame,
-    bench_sh: DataFrame,
+    bench_sh: DataFrame | None,
     sink_path: str,
     batch_id: int,
     compact_every: int | None = None,
@@ -354,77 +317,70 @@ def full_curation_ingest_batch(
     temp_rates: DataFrame | None = None,
     decontam_mode: str = "shingles",
 ) -> None:
-    """One micro-batch of the COMPLETE per-doc curation pipeline — the
-    ingest-time twin of corpus_release's per-doc stages in one pass:
-    (0) optional PII redaction (stateless TRANSFORM — the shared
-    plans.corpus.pii_redact expression the pii_scrub audit certifies),
-    (1) the Gopher-style repetition quality gate (stateless),
-    (2) the benchmark veto (stateless, quarantined; ``decontam_mode``
-    picks shingle-overlap or exact-span, as in ingest_with_decontam —
-    ``bench_sh`` must be the matching static frame),
-    (3) near-dup dedup against the accumulating bucket store,
-    (4) optional temperature mixing (``temp_rates``: a STATIC
-    (source, rate_ppm) frame — plans.northstar.static_temp_rates over
-    a declared corpus or prior snapshot, NEVER the unbounded stream;
-    membership is the shared temp_keep_cond integer rule, applied to
-    the sink append only, so mix-dropped docs still shadow their later
-    near-dups exactly as the release pipeline's dedup-before-mix
-    order does).
-    Redaction runs FIRST so every downstream signal (quality ratios,
-    shingles, near-dup signatures) sees the text a release would ship.
-    Stage order is the cheap-to-expensive rule: quality needs no
-    state, decontam joins a tiny broadcast, and only the survivors of
-    both pay the signature aggregation + store join. Corpus-global
-    budget FITTING stays release-time/static — the stream only
-    APPLIES precomputed thresholds. The quarantine and bucket stores
-    both fold on the ``compact_every`` cadence."""
+    """One micro-batch of ``mode`` (the foreachBatch body of every
+    curation stream): its stages (see Mode) in order. Every output —
+    the sink, the quarantine, the dedup stores — lands under this
+    batch's idempotent dir, so an at-least-once replay overwrites its
+    own first attempt. ``bench_sh`` is the ``decontam_mode``-matching
+    static frame (bench_shingles or bench_spans output) of a veto mode,
+    None otherwise. The quarantine and dedup stores fold on the
+    ``compact_every`` cadence."""
     from etl_wikipedia_updates_spark.plans.corpus import pii_redact
     from etl_wikipedia_updates_spark.plans.northstar import (
         quality_keep,
         temp_membership,
     )
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        dedup_ingest_batch,
-    )
 
+    spec = _mode(mode, bench_sh, redact_pii, temp_rates)
     spark = batch_df.sparkSession
-    if redact_pii:
-        batch_df = pii_redact(batch_df)
-    sink_transform = (
-        None
-        if temp_rates is None
-        else (lambda df: temp_membership(df, temp_rates))
-    )
-    # kept and clean are each consumed by MULTIPLE downstream actions
-    # (verdicts, the quarantine write, dedup's band aggregation AND
-    # its survivors append); without the persists every action
-    # re-runs the quality gate's explode — the dominant per-batch
-    # map cost — the same reasoning as verified_ingest_batch's dtok
-    # persist.
-    kept = quality_keep(batch_df).persist()
-    verdicts = _mode_fns(decontam_mode)[1](
-        kept, bench_sh, exclude_self=exclude_self
-    ).persist()
-    clean = kept.join(
-        verdicts.select("doc_id"), "doc_id", "left_anti"
-    ).persist()
+    df = pii_redact(batch_df) if redact_pii else batch_df
+    # A stage output read by more than one later action is persisted:
+    # the gated docs feed the verdicts and the veto survivors, and the
+    # survivors feed the tail's band aggregation and its sink append.
+    # Without the persists every action re-runs the quality gate's
+    # explode — the dominant per-batch map cost.
+    held: list[DataFrame] = []
     try:
-        append_batch(verdicts, contam_store_path(sink_path), batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_contam_store(spark, sink_path, below=batch_id)
-        dedup_ingest_batch(
-            clean, sink_path, batch_id, compact_every=compact_every,
-            sink_transform=sink_transform,
-        )
+        if spec.quality:
+            df = quality_keep(df)
+            if spec.veto:
+                held.append(df.persist())
+        if spec.veto:
+            verdicts = _mode_fns(decontam_mode)[1](
+                df, bench_sh, exclude_self=exclude_self
+            ).persist()
+            held.append(verdicts)
+            df = df.join(verdicts.select("doc_id"), "doc_id", "left_anti")
+            if spec.dedup is None:
+                append_batch(df, sink_path, batch_id)
+            else:
+                held.append(df.persist())
+            append_batch(verdicts, contam_store_path(sink_path), batch_id)
+            if compact_every and batch_id > 0 and batch_id % compact_every == 0:
+                N.compact_store(
+                    spark, contam_store_path(sink_path), below=batch_id
+                )
+        if spec.dedup is not None:
+            N.dedup_ingest_batch(
+                spec.dedup,
+                df,
+                sink_path,
+                batch_id,
+                spec.id_col,
+                compact_every,
+                None
+                if temp_rates is None
+                else (lambda d: temp_membership(d, temp_rates)),
+            )
     finally:
-        clean.unpersist()
-        verdicts.unpersist()
-        kept.unpersist()
+        for f in reversed(held):
+            f.unpersist()
 
 
-def ingest_with_full_curation(
+def ingest_with_mode(
+    mode: str,
     stream: DataFrame,
-    bench_docs: DataFrame,
+    bench_docs: DataFrame | None,
     sink_path: str,
     checkpoint: str,
     available_now: bool = True,
@@ -434,70 +390,81 @@ def ingest_with_full_curation(
     temp_rates: DataFrame | None = None,
     decontam_mode: str = "shingles",
 ) -> StreamingQuery:
-    """Streamed documents -> (optionally PII-redacted,) quality-gated,
-    decontaminated, near-dup-deduped, (optionally temperature-mixed)
-    sink: the one-command crawl-curation ingest. ``temp_rates`` is the
-    stream-static temperature model (see full_curation_ingest_batch) —
-    fit it with plans.northstar.static_temp_rates over a DECLARED
-    static frame. Persisted-bench (released on stream termination),
-    exclude_self, and ``decontam_mode`` notes as in
-    ingest_with_decontam."""
-    bench_sh = _mode_fns(decontam_mode)[0](bench_docs).persist()
+    """Streamed ``mode`` curation into ``sink_path``, checkpointed:
+    every micro-batch runs ingest_batch, and a restarted query resumes
+    exactly once (replayable source plus idempotent per-batch dirs).
+    ``bench_docs`` is a veto mode's static held-out corpus (None for
+    the others); its ``decontam_mode`` frame is built ONCE, outside the
+    per-batch handler, and persisted only while the stream lives
+    (start_foreach_batch). ``exclude_self`` as in decontam_verdicts:
+    True only when bench_docs is an id-shared subset of the stream,
+    False for an external benchmark. ``temp_rates``: see Mode."""
+    _mode(mode, bench_docs, redact_pii, temp_rates)
+    bench_sh = (
+        None if bench_docs is None else _mode_fns(decontam_mode)[0](bench_docs)
+    )
+    opts = dict(
+        compact_every=compact_every,
+        exclude_self=exclude_self,
+        redact_pii=redact_pii,
+        temp_rates=temp_rates,
+        decontam_mode=decontam_mode,
+    )
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        full_curation_ingest_batch(
-            batch_df, bench_sh, sink_path, batch_id,
-            compact_every=compact_every,
-            exclude_self=exclude_self,
-            redact_pii=redact_pii,
-            temp_rates=temp_rates,
-            decontam_mode=decontam_mode,
-        )
+        if mode == "curate":
+            # looked up per call, so a wrapper installed on the module
+            # attribute (perfbench/curate_replay.py) sees every batch
+            full_curation_ingest_batch(
+                batch_df, bench_sh, sink_path, batch_id, **opts
+            )
+        else:
+            ingest_batch(mode, batch_df, bench_sh, sink_path, batch_id, **opts)
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
+    return start_foreach_batch(
+        stream, handle, checkpoint, available_now, persisted=bench_sh
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
-    _release_on_termination(query, bench_sh)
-    return query
 
 
-def batch_full_curation_keep(
+def batch_keep(
+    mode: str,
     docs: DataFrame,
-    bench_docs: DataFrame,
+    bench_docs: DataFrame | None = None,
     exclude_self: bool = True,
     redact_pii: bool = False,
     temp_rates: DataFrame | None = None,
     decontam_mode: str = "shingles",
 ) -> DataFrame:
-    """The BATCH statement of the full pipeline: optional PII
-    redaction, quality gate, then benchmark veto, then the
-    no-smaller-id-shares-a-bucket rule over the survivors, then the
-    optional temperature-membership filter against the same static
-    (source, rate_ppm) frame the stream applies. Equals the streamed
-    sink when the corpus replays in doc_id order (the dedup stage's
-    usual arrival-order contract; redaction, the first two gates, and
-    temperature membership are stateless and order-free)."""
+    """The BATCH statement of ``mode`` (equivalence tests and
+    backfills): the same stages over the whole frame, the dedup tail
+    against an empty store (neardup.batch_dedup_keep). The streamed
+    sink equals this when the frame replays in id order — the dedup
+    tail's arrival-order contract; redaction, the quality gate, the
+    veto and temperature membership are stateless per doc, so they
+    hold under any batching."""
     from etl_wikipedia_updates_spark.plans.corpus import pii_redact
     from etl_wikipedia_updates_spark.plans.northstar import (
         quality_keep,
         temp_membership,
     )
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        batch_neardup_keep,
-    )
 
+    spec = _mode(mode, bench_docs, redact_pii, temp_rates)
     if redact_pii:
         docs = pii_redact(docs)
-    kept = quality_keep(docs)
-    out = batch_neardup_keep(
-        batch_decontam_keep(
-            kept, bench_docs, exclude_self=exclude_self,
-            mode=decontam_mode,
-        )
-    )
+    if spec.quality:
+        docs = quality_keep(docs)
+    if spec.veto:
+        build, verdicts_fn = _mode_fns(decontam_mode)
+        drops = verdicts_fn(docs, build(bench_docs), exclude_self=exclude_self)
+        docs = docs.join(drops.select("doc_id"), "doc_id", "left_anti")
+    if spec.dedup is not None:
+        docs = N.batch_dedup_keep(spec.dedup, docs, spec.id_col)
     if temp_rates is not None:
-        out = temp_membership(out, temp_rates)
-    return out
+        docs = temp_membership(docs, temp_rates)
+    return docs
+
+
+# The curate mode under the names its callers use.
+ingest_with_full_curation = partial(ingest_with_mode, "curate")
+full_curation_ingest_batch = partial(ingest_batch, "curate")
+batch_full_curation_keep = partial(batch_keep, "curate")

@@ -47,7 +47,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import StreamingQuery, StreamingQueryListener
 
 from etl_wikipedia_updates_spark.streaming.snapshot import (
     SnapshotTable,
@@ -503,6 +503,90 @@ def retain_newest_partitioned(
     }
 
 
+class _UnpersistOnTermination(StreamingQueryListener):
+    """Release a stream's persisted static frame when the query ends.
+
+    Without a termination hook the cache entry of a frame persisted
+    once per stream (outside the per-batch handler) outlives its
+    stream and leaks across restarted streams in the same session. The
+    listener unpersists on the owning query's termination event and
+    deregisters itself; it is also invoked directly (idempotently, via
+    the once-flag) if the query finished before the listener could be
+    registered — the availableNow-on-tiny-data race."""
+
+    def __init__(self, spark: SparkSession, query_id: str, df: DataFrame):
+        self._spark = spark
+        self._qid = query_id
+        self._df = df
+        self._done = False
+
+    def release(self) -> None:
+        if self._done:
+            return
+        self._done = True
+        try:
+            self._df.unpersist()
+        finally:
+            self._spark.streams.removeListener(self)
+
+    def onQueryStarted(self, event) -> None:
+        pass
+
+    def onQueryProgress(self, event) -> None:
+        pass
+
+    def onQueryIdle(self, event) -> None:
+        pass
+
+    def onQueryTerminated(self, event) -> None:
+        if str(event.id) == self._qid:
+            self.release()
+
+
+def start_foreach_batch(
+    stream: DataFrame,
+    handle,
+    checkpoint: str,
+    available_now: bool = True,
+    persisted: DataFrame | None = None,
+) -> StreamingQuery:
+    """Start ``stream`` into the foreachBatch function ``handle``
+    (batch_df, batch_id), checkpointed at ``checkpoint`` — the one
+    writeStream of every ingest. ``available_now`` drains what the
+    source holds and stops (bounded replay); otherwise the query runs
+    on the default trigger until stopped.
+
+    ``persisted`` is a static frame every batch reads (a benchmark
+    frame): it is persisted here and released when the query
+    terminates, or at once if the query fails to start — a start that
+    raises (a batch frame passed as ``stream``, a bad checkpoint)
+    must not leave a session-lifetime cache entry behind."""
+    try:
+        if persisted is not None:
+            persisted.persist()
+        writer = stream.writeStream.foreachBatch(handle).option(
+            "checkpointLocation", checkpoint
+        )
+        if available_now:
+            writer = writer.trigger(availableNow=True)
+        query = writer.start()
+    except BaseException:
+        if persisted is not None:
+            persisted.unpersist()
+        raise
+    if persisted is not None:
+        spark = stream.sparkSession
+        listener = _UnpersistOnTermination(spark, str(query.id), persisted)
+        spark.streams.addListener(listener)
+        # The query may have terminated between start() and
+        # addListener — a terminated query never fires the event for
+        # late listeners, so release inline (release() is idempotent
+        # against a double fire).
+        if not query.isActive:
+            listener.release()
+    return query
+
+
 def ingest_with_retention(
     stream: DataFrame,
     sink_path: str,
@@ -520,12 +604,7 @@ def ingest_with_retention(
         if max_rows is not None:
             apply_retention(spark, sink_path, max_rows, ts_col)
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, handle, checkpoint, available_now)
 
 
 def rollup_partials(
@@ -631,12 +710,7 @@ def ingest_with_rollup(
         append_batch(batch_df, sink_path, batch_id)
         rollup_partials(batch_df, rollup_path, batch_id, ts_col, key_col)
 
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream, handle, checkpoint, available_now)
 
 
 def enrich_stream(stream: DataFrame, dim: DataFrame, key: str) -> DataFrame:

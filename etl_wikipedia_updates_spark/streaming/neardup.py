@@ -4,14 +4,15 @@ The batch near-dup family (minhash_lsh, dedup_corpus) dedups a corpus
 at rest; a training-data pipeline also needs the INGEST form — drop a
 crawled row the moment it collides with anything already ingested,
 without re-scanning the corpus per batch. This module is that
-operator family: four pipelines over one shared batch engine —
-MinHash-band blocking for documents (the batch path's exact shingle/
-hash/band machinery, operators.dedup), multi-band sign-bucket LSH for
-embeddings (SemDeDup-style semantic blocking), the document form
-composed with the repetition quality gate (corpus_release's
-ingest-time twin), and a VERIFIED precision mode (band collisions
-only nominate; exact shingle-Jaccard against the colliding earlier
-doc decides, at the cost of a second store of per-doc shingle sets).
+operator family: the dedup tails (``Dedup``) the streaming curation
+modes (streaming.decontam.MODES) end in, over one shared per-batch
+engine (``dedup_ingest_batch``) — MinHash-band blocking for documents
+(the batch path's exact shingle/hash/band machinery,
+operators.dedup), exact-span blocking, multi-band sign-bucket LSH for
+embeddings (SemDeDup-style semantic blocking), and VERIFIED precision
+variants of the document and embedding forms (band collisions only
+nominate; the exact overlap or cosine against the colliding earlier
+row decides, at the cost of a second, payload store).
 The shared mechanics:
 
 - Per micro-batch, each doc's signature unpivots into (lang, band,
@@ -31,7 +32,7 @@ the data sink (append_batch layout): idempotent under foreachBatch
 replay because a retried batch overwrites its own dir, and the
 collision read EXCLUDES the current batch id, so a replay never
 collides with its own first attempt. The store COMPACTS through the
-same SnapshotTable fold the data sink uses (compact_bucket_store /
+same SnapshotTable fold the data sink uses (compact_store /
 compact_every), so its file count is bounded by the compaction cadence
 instead of growing one directory per trigger forever. At 100 TB the
 store is
@@ -46,10 +47,12 @@ the near-dup generalization with explicit, inspectable state.
 from __future__ import annotations
 
 import os
+from dataclasses import dataclass
+from functools import partial
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
 
 from etl_wikipedia_updates_spark.operators import dedup as D
 from etl_wikipedia_updates_spark.operators import similarity as S
@@ -76,14 +79,6 @@ _VECTOR_SCHEMA = "doc_id bigint, embedding array<float>"
 
 def bucket_store_path(sink_path: str) -> str:
     return os.path.join(sink_path, BUCKETS_DIRNAME)
-
-
-def shingle_store_path(sink_path: str) -> str:
-    return os.path.join(sink_path, SHINGLES_DIRNAME)
-
-
-def vector_store_path(sink_path: str) -> str:
-    return os.path.join(sink_path, VECTORS_DIRNAME)
 
 
 def _store_view(
@@ -120,11 +115,11 @@ def _store_view(
     return base
 
 
-def _compact_store(
+def compact_store(
     spark: SparkSession,
     store_path: str,
-    target_files: int,
-    below: int | None,
+    target_files: int = 4,
+    below: int | None = None,
 ) -> dict | None:
     """Fold one accumulating per-batch store (bucket or shingle) into a
     snapshot version — the same SnapshotTable fold the data sink uses
@@ -159,43 +154,6 @@ def _compact_store(
         below=below,
     )
     return {"version": version, "folded_dirs": len(foldable)}
-
-
-def compact_bucket_store(
-    spark: SparkSession,
-    sink_path: str,
-    target_files: int = 4,
-    below: int | None = None,
-) -> dict | None:
-    """Fold the LSH bucket store (see ``_compact_store``)."""
-    return _compact_store(
-        spark, bucket_store_path(sink_path), target_files, below
-    )
-
-
-def compact_shingle_store(
-    spark: SparkSession,
-    sink_path: str,
-    target_files: int = 4,
-    below: int | None = None,
-) -> dict | None:
-    """Fold the verified-mode shingle store (see ``_compact_store``)."""
-    return _compact_store(
-        spark, shingle_store_path(sink_path), target_files, below
-    )
-
-
-def compact_vector_store(
-    spark: SparkSession,
-    sink_path: str,
-    target_files: int = 4,
-    below: int | None = None,
-) -> dict | None:
-    """Fold the embedding-verified-mode vector store (see
-    ``_compact_store``)."""
-    return _compact_store(
-        spark, vector_store_path(sink_path), target_files, below
-    )
 
 
 def _require_payload_coverage(
@@ -348,204 +306,6 @@ def embedding_band_rows(emb: DataFrame, dim: int = EMB_DIM) -> DataFrame:
     )
 
 
-def _ingest_dedup_batch(
-    batch_df: DataFrame,
-    sink_path: str,
-    batch_id: int,
-    band_fn,
-    id_col: str,
-    compact_every: int | None = None,
-    sink_transform=None,
-) -> None:
-    """One micro-batch of dedup ingest (foreachBatch body), shared by
-    the document (MinHash) and embedding (sign-bucket) variants.
-
-    Reads the bucket store's COMMITTED view below batch_id — the
-    compacted snapshot plus unfolded batch dirs (a replayed batch must
-    not collide with its own first attempt) — drops colliding rows,
-    appends survivors to the data sink and ALL batch buckets to the
-    store, both under this batch's idempotent dir. Every
-    ``compact_every`` batches the store is folded into one snapshot
-    version (strictly below this batch id, so a retry of THIS batch
-    still excludes its own buckets); re-running the compaction on a
-    batch retry publishes an identical extra version — idempotent in
-    content.
-
-    ``sink_transform`` (a DataFrame -> DataFrame callable, e.g. the
-    temperature-membership filter) applies to the SINK append only —
-    the bucket store still records every survivor's bands, mirroring
-    the release pipeline where dedup canonicalization runs BEFORE
-    mixing: a mix-dropped doc must still shadow its later near-dups,
-    or a duplicate of it would sneak into the sink."""
-    spark = batch_df.sparkSession
-    # Persisted across the two actions below: the survivors write
-    # evaluates band (through drops) and the store write evaluates it
-    # again — without the persist each batch would pay the signature
-    # aggregation (the dominant per-batch cost) twice.
-    band = band_fn(batch_df).persist()
-    try:
-        store = _store_view(spark, bucket_store_path(sink_path), batch_id)
-        drops = batch_neardup_drops(band, store)
-        survivors = batch_df.join(
-            drops.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
-        )
-        if sink_transform is not None:
-            survivors = sink_transform(survivors)
-        append_batch(survivors, sink_path, batch_id)
-        append_batch(
-            band.select("doc_id", "lang", "band", "band_key"),
-            bucket_store_path(sink_path),
-            batch_id,
-        )
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_bucket_store(spark, sink_path, below=batch_id)
-    finally:
-        band.unpersist()
-
-
-def dedup_ingest_batch(
-    batch_df: DataFrame,
-    sink_path: str,
-    batch_id: int,
-    compact_every: int | None = None,
-    sink_transform=None,
-) -> None:
-    """Document (MinHash/LSH) dedup ingest micro-batch."""
-    _ingest_dedup_batch(
-        batch_df, sink_path, batch_id, doc_band_rows, "doc_id",
-        compact_every=compact_every,
-        sink_transform=sink_transform,
-    )
-
-
-def ingest_with_neardup(
-    stream: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-) -> StreamingQuery:
-    """Streamed documents -> near-dup-deduped sink, checkpointed.
-    ``compact_every=N`` folds the bucket store every N batches."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_ingest_batch(
-            batch_df, sink_path, batch_id, compact_every=compact_every
-        )
-
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def quality_neardup_ingest_batch(
-    batch_df: DataFrame,
-    sink_path: str,
-    batch_id: int,
-    compact_every: int | None = None,
-) -> None:
-    """corpus_release's ingest-time twin: the Gopher-style repetition
-    quality gate (plans.northstar._rep_per_doc — fit-free, stateless
-    per doc, so it streams without any model state) runs FIRST, then
-    the surviving docs go through near-dup dedup against the bucket
-    store. Mixing/splitting need corpus-global budgets, so they stay
-    release-time; quality + dedup are the stages a crawl pipeline
-    applies per batch."""
-    from etl_wikipedia_updates_spark.plans.northstar import quality_keep
-
-    kept = quality_keep(batch_df)
-    _ingest_dedup_batch(
-        kept, sink_path, batch_id, doc_band_rows, "doc_id",
-        compact_every=compact_every,
-    )
-
-
-def ingest_with_quality_neardup(
-    stream: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-) -> StreamingQuery:
-    """Streamed documents -> quality-gated, near-dup-deduped sink."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        quality_neardup_ingest_batch(
-            batch_df, sink_path, batch_id, compact_every=compact_every
-        )
-
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def batch_quality_neardup_keep(docs: DataFrame) -> DataFrame:
-    """Batch statement of the quality+dedup ingest: quality gate over
-    the corpus, then the no-smaller-id-shares-a-bucket rule over the
-    survivors."""
-    from etl_wikipedia_updates_spark.plans.northstar import quality_keep
-
-    return batch_neardup_keep(quality_keep(docs))
-
-
-def ingest_with_embedding_neardup(
-    stream: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-) -> StreamingQuery:
-    """Streamed embeddings -> sign-bucket-deduped sink (SemDeDup-style
-    ingest blocking), checkpointed."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        _ingest_dedup_batch(
-            batch_df, sink_path, batch_id, embedding_band_rows, "vec_id",
-            compact_every=compact_every,
-        )
-
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def _batch_keep(df: DataFrame, band_fn, id_col: str) -> DataFrame:
-    # The batch rule IS the streaming rule with an empty store — one
-    # implementation (batch_neardup_drops), so the equivalence
-    # reference can never drift from what the ingest path computes.
-    drops = batch_neardup_drops(band_fn(df), None)
-    return df.join(
-        drops.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
-    )
-
-
-def batch_embedding_neardup_keep(emb: DataFrame) -> DataFrame:
-    """Batch statement of the embedding streaming rule (equivalence
-    tests and backfills) — survives iff no smaller vec_id shares any
-    sign-bucket band."""
-    return _batch_keep(emb, embedding_band_rows, "vec_id")
-
-
-def batch_neardup_keep(docs: DataFrame) -> DataFrame:
-    """The BATCH statement of the streaming rule, for equivalence
-    tests and backfills: a doc survives iff it is the smallest doc_id
-    in every bucket it occupies... i.e. iff NO smaller doc_id shares
-    any of its buckets. When a stream replays the corpus in doc_id
-    order, the streamed sink must equal this exactly (arrival order =
-    doc_id order makes 'earlier' and 'smaller' the same relation
-    across and within batches)."""
-    return _batch_keep(docs, doc_band_rows, "doc_id")
-
-
 # --- span-mode (exact-substring) ingest dedup ---------------------------------
 # The sixth variant (r17): a doc is dropped iff it shares ONE verbatim
 # SPAN_W-token span with any earlier-arrived doc — the streaming
@@ -580,54 +340,6 @@ def doc_span_rows(docs: DataFrame) -> DataFrame:
         F.lit(0).alias("band"),
         F.col("h").cast("string").alias("band_key"),
     )
-
-
-def span_dedup_ingest_batch(
-    batch_df: DataFrame,
-    sink_path: str,
-    batch_id: int,
-    compact_every: int | None = None,
-    sink_transform=None,
-) -> None:
-    """Span-mode dedup ingest micro-batch (shared engine body)."""
-    _ingest_dedup_batch(
-        batch_df, sink_path, batch_id, doc_span_rows, "doc_id",
-        compact_every=compact_every,
-        sink_transform=sink_transform,
-    )
-
-
-def ingest_with_span_neardup(
-    stream: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-) -> StreamingQuery:
-    """Streamed documents -> span-dedup'd sink: a doc lands only if
-    none of its SPAN_W-token spans was seen from an earlier doc.
-    Checkpointed; ``compact_every=N`` folds the span store every N
-    batches."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        span_dedup_ingest_batch(
-            batch_df, sink_path, batch_id, compact_every=compact_every
-        )
-
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def batch_span_keep(docs: DataFrame) -> DataFrame:
-    """Batch statement of the span streaming rule (equivalence tests
-    and backfills): a doc survives iff no smaller doc_id holds any of
-    its span hashes — span_removal's min-id ownership rule lifted
-    from span excision to a whole-doc veto."""
-    return _batch_keep(docs, doc_span_rows, "doc_id")
 
 
 def seed_span_store_from(
@@ -835,133 +547,6 @@ def _band_pairs_within(band: DataFrame) -> DataFrame:
     )
 
 
-def verified_ingest_batch(
-    batch_df: DataFrame,
-    sink_path: str,
-    batch_id: int,
-    compact_every: int | None = None,
-) -> None:
-    """One micro-batch of VERIFIED dedup ingest: candidates come from
-    band collisions (within the batch, and batch x bucket store),
-    but a doc is dropped only when exact shingle-Jaccard against the
-    earlier doc clears VERIFY_THRESHOLD. Appends the survivors, ALL
-    batch buckets, and ALL batch shingle sets under this batch's
-    idempotent dirs; the store reads exclude this batch id, so a
-    replayed batch never verifies against its own first attempt."""
-    spark = batch_df.sparkSession
-    keys = ["lang", "band", "band_key"]
-    # ONE shingle -> per-char term-hash pass per batch (the dominant
-    # per-batch map cost): band rows AND the verify arrays both derive
-    # from the persisted dtok instead of re-running the chain each —
-    # through the SAME helpers the batch equivalence reference uses,
-    # so the two paths cannot drift.
-    dtok = doc_tids(batch_df).persist()
-    band = doc_band_rows(batch_df, dtok=dtok).persist()
-    toks = doc_shingle_tid_arrays(batch_df, dtok=dtok).persist()
-    try:
-        store_band = _store_view(
-            spark, bucket_store_path(sink_path), batch_id
-        )
-        pairs = _band_pairs_within(band)
-        tok_lookup = toks
-        if store_band is not None:
-            # cross-batch candidates: earlier doc (store) is doc_id,
-            # this batch's doc is doc_id2 — the only droppable side
-            cross = (
-                band.join(
-                    store_band.withColumnRenamed("doc_id", "doc_id_prev"),
-                    keys,
-                )
-                .select(
-                    F.col("doc_id_prev").alias("doc_id"),
-                    F.col("doc_id").alias("doc_id2"),
-                )
-                .distinct()
-            )
-            pairs = pairs.unionByName(cross)
-            # a bucket store without matching shingle coverage (sink
-            # previously fed by a non-verified mode) must fail loudly,
-            # not silently pass near-dups of unverifiable docs
-            _require_payload_coverage(
-                sink_path, SHINGLES_DIRNAME, batch_id, "verified"
-            )
-            store_toks = _store_view(
-                spark,
-                shingle_store_path(sink_path),
-                batch_id,
-                schema=_SHINGLE_SCHEMA,
-            )
-            if store_toks is not None:
-                tok_lookup = toks.unionByName(store_toks)
-        verified = D.jaccard_verify_sketch(
-            pairs, tok_lookup, VERIFY_THRESHOLD, SHINGLE_SKETCH_K
-        )
-        drops = verified.select("doc_id2").distinct()
-        survivors = batch_df.join(
-            drops.withColumnRenamed("doc_id2", "doc_id"),
-            "doc_id",
-            "left_anti",
-        )
-        append_batch(survivors, sink_path, batch_id)
-        append_batch(
-            band.select("doc_id", "lang", "band", "band_key"),
-            bucket_store_path(sink_path),
-            batch_id,
-        )
-        append_batch(toks, shingle_store_path(sink_path), batch_id)
-        if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_bucket_store(spark, sink_path, below=batch_id)
-            compact_shingle_store(spark, sink_path, below=batch_id)
-    finally:
-        band.unpersist()
-        toks.unpersist()
-        dtok.unpersist()
-
-
-def ingest_with_verified_neardup(
-    stream: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-) -> StreamingQuery:
-    """Streamed documents -> Jaccard-VERIFIED near-dup-deduped sink
-    (precision mode: band collisions only nominate, the exact overlap
-    decides)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        verified_ingest_batch(
-            batch_df, sink_path, batch_id, compact_every=compact_every
-        )
-
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def batch_verified_neardup_keep(docs: DataFrame) -> DataFrame:
-    """The BATCH statement of the verified streaming rule: a doc
-    survives iff NO smaller doc_id both shares a band bucket AND has
-    exact shingle-Jaccard >= VERIFY_THRESHOLD with it. When a stream
-    replays the corpus in doc_id order, the verified sink must equal
-    this exactly (same candidate set: global bucket enumeration covers
-    within-batch and cross-batch pairs alike; same verify arrays:
-    batch and store shingle sets come from one builder)."""
-    band = doc_band_rows(docs)
-    pairs = _band_pairs_within(band)
-    toks = doc_shingle_tid_arrays(docs)
-    verified = D.jaccard_verify_sketch(
-        pairs, toks, VERIFY_THRESHOLD, SHINGLE_SKETCH_K
-    )
-    drops = verified.select(
-        F.col("doc_id2").alias("doc_id")
-    ).distinct()
-    return docs.join(drops, "doc_id", "left_anti")
-
-
 # --- verified (precision-mode) EMBEDDING dedup --------------------------------
 # The embedding twin of verified mode (SemDeDup with the verify pass):
 # sign-bucket band collisions only NOMINATE; the exact cosine against
@@ -1000,111 +585,216 @@ def _cosine_verify(
     )
 
 
-def verified_embedding_ingest_batch(
+def embedding_vectors(emb: DataFrame) -> DataFrame:
+    """(doc_id, embedding): the embedding-verified payload — the
+    vector itself, keyed like the bucket rows."""
+    return emb.select(F.col("vec_id").alias("doc_id"), "embedding")
+
+
+# --- dedup tails: one per-batch engine for every near-dup mode ----------------
+@dataclass(frozen=True)
+class Verify:
+    """The precision pass of a verified tail: each id's decision
+    evidence (``payload`` rows, kept in their own per-batch store
+    ``dirname`` beside the bucket store) and the rule that decides a
+    band-nominated (doc_id, doc_id2) pair from it (``decide`` returns
+    the pairs that ARE near-duplicates)."""
+
+    dirname: str
+    schema: str
+    payload: Callable[..., DataFrame]
+    decide: Callable[[DataFrame, DataFrame], DataFrame]
+    label: str  # the mode name its coverage error reports
+
+
+@dataclass(frozen=True)
+class Dedup:
+    """A dedup tail: how a batch becomes (doc_id, lang, band, band_key)
+    bucket rows, plus an optional verify pass. ``shared``, when set,
+    builds a frame that ``band`` and the payload both derive from
+    (passed as their second argument), so the ingest path persists it
+    once per batch instead of deriving it twice."""
+
+    band: Callable[..., DataFrame]
+    verify: Verify | None = None
+    shared: Callable[[DataFrame], DataFrame] | None = None
+
+
+MINHASH_DEDUP = Dedup(doc_band_rows)
+SPAN_DEDUP = Dedup(doc_span_rows)
+EMBEDDING_DEDUP = Dedup(embedding_band_rows)
+VERIFIED_DEDUP = Dedup(
+    doc_band_rows,
+    Verify(
+        SHINGLES_DIRNAME,
+        _SHINGLE_SCHEMA,
+        doc_shingle_tid_arrays,
+        partial(
+            D.jaccard_verify_sketch,
+            threshold=VERIFY_THRESHOLD,
+            k=SHINGLE_SKETCH_K,
+        ),
+        "verified",
+    ),
+    shared=doc_tids,
+)
+EMBEDDING_VERIFIED_DEDUP = Dedup(
+    embedding_band_rows,
+    Verify(
+        VECTORS_DIRNAME,
+        _VECTOR_SCHEMA,
+        embedding_vectors,
+        partial(_cosine_verify, threshold=EMB_VERIFY_THRESHOLD),
+        "embedding-verified",
+    ),
+)
+
+
+def _tail_frames(
+    tail: Dedup, df: DataFrame, hold
+) -> tuple[DataFrame, DataFrame | None]:
+    """(band rows, payload rows or None) of ``df``, each passed through
+    ``hold`` as it is built — the ingest path persists, the batch twin
+    passes frames through. The shared frame is held first so both
+    derivations read its cached rows."""
+    args = (df,) if tail.shared is None else (df, hold(tail.shared(df)))
+    band = hold(tail.band(*args))
+    payload = None if tail.verify is None else hold(tail.verify.payload(*args))
+    return band, payload
+
+
+def _tail_drops(
+    tail: Dedup,
+    band: DataFrame,
+    payload: DataFrame | None,
+    store_band: DataFrame | None,
+    store_payload: DataFrame | None,
+) -> DataFrame:
+    """doc_ids of the batch to drop. Unverified: any bucket shared with
+    an earlier doc (batch_neardup_drops). Verified: band collisions
+    within the batch and against the store only nominate (earlier doc
+    as doc_id, this batch's as doc_id2 — the only droppable side); the
+    payload decides. A None store is the empty store of batch 0 and of
+    the batch twin."""
+    if tail.verify is None:
+        return batch_neardup_drops(band, store_band)
+    pairs = _band_pairs_within(band)
+    lookup = payload
+    if store_band is not None:
+        cross = (
+            band.join(
+                store_band.withColumnRenamed("doc_id", "doc_id_prev"),
+                ["lang", "band", "band_key"],
+            )
+            .select(
+                F.col("doc_id_prev").alias("doc_id"),
+                F.col("doc_id").alias("doc_id2"),
+            )
+            .distinct()
+        )
+        pairs = pairs.unionByName(cross)
+        if store_payload is not None:
+            lookup = payload.unionByName(store_payload)
+    return (
+        tail.verify.decide(pairs, lookup)
+        .select(F.col("doc_id2").alias("doc_id"))
+        .distinct()
+    )
+
+
+def _anti(df: DataFrame, drops: DataFrame, id_col: str) -> DataFrame:
+    return df.join(
+        drops.withColumnRenamed("doc_id", id_col), id_col, "left_anti"
+    )
+
+
+def dedup_ingest_batch(
+    tail: Dedup,
     batch_df: DataFrame,
     sink_path: str,
     batch_id: int,
-    compact_every: int | None = None,
+    id_col: str,
+    compact_every: int | None,
+    sink_transform,
 ) -> None:
-    """One micro-batch of VERIFIED embedding dedup ingest: candidates
-    come from sign-bucket band collisions (within the batch, and
-    batch x bucket store), but a vector is dropped only when exact
-    cosine against the earlier vector clears EMB_VERIFY_THRESHOLD.
-    Appends the survivors, ALL batch buckets, and ALL batch vectors
-    under this batch's idempotent dirs; the store reads exclude this
-    batch id, so a replayed batch never verifies against its own
-    first attempt."""
+    """One micro-batch of dedup ingest (the dedup tail of every
+    streaming mode that has one).
+
+    Reads the stores' COMMITTED views below batch_id — the compacted
+    snapshot plus unfolded batch dirs (a replayed batch must not
+    collide with, or verify against, its own first attempt) — drops
+    the rows ``tail`` rules duplicates, then appends the survivors to
+    the data sink, ALL batch bucket rows to the bucket store and, for
+    a verified tail, ALL batch payload rows to the payload store, each
+    under this batch's idempotent dir. Every ``compact_every`` batches
+    each store is folded into one snapshot version (strictly below
+    this batch id, so a retry of THIS batch still excludes its own
+    rows); re-running the compaction on a batch retry folds nothing
+    new and publishes nothing.
+
+    ``sink_transform`` (None, or a DataFrame -> DataFrame callable such
+    as the temperature-membership filter) applies to the SINK append
+    only — the stores still record every survivor, mirroring the
+    release pipeline where dedup canonicalization runs BEFORE mixing: a
+    mix-dropped doc must still shadow its later near-dups, or a
+    duplicate of it would sneak into the sink."""
     spark = batch_df.sparkSession
-    keys = ["lang", "band", "band_key"]
-    band = embedding_band_rows(batch_df).persist()
-    vecs = batch_df.select(
-        F.col("vec_id").alias("doc_id"), "embedding"
-    ).persist()
+    # Band and payload rows (and the frame they share) are each read by
+    # the drops, i.e. the sink write, and again by their store append;
+    # without the persists every batch would pay the signature
+    # aggregation (the dominant per-batch cost) twice.
+    held: list[DataFrame] = []
+
+    def hold(df: DataFrame) -> DataFrame:
+        held.append(df.persist())
+        return df
+
     try:
-        store_band = _store_view(
-            spark, bucket_store_path(sink_path), batch_id
-        )
-        pairs = _band_pairs_within(band)
-        vec_lookup = vecs
-        if store_band is not None:
-            cross = (
-                band.join(
-                    store_band.withColumnRenamed("doc_id", "doc_id_prev"),
-                    keys,
+        band, payload = _tail_frames(tail, batch_df, hold)
+        bucket_path = bucket_store_path(sink_path)
+        stores = [
+            (bucket_path, band.select("doc_id", "lang", "band", "band_key"))
+        ]
+        store_band = _store_view(spark, bucket_path, batch_id)
+        store_payload = None
+        if tail.verify is not None:
+            payload_path = os.path.join(sink_path, tail.verify.dirname)
+            stores.append((payload_path, payload))
+            if store_band is not None:
+                # a bucket store without matching payload coverage
+                # (sink previously fed by a non-verified mode) must fail
+                # loudly, not silently pass near-dups of unverifiable
+                # docs
+                _require_payload_coverage(
+                    sink_path, tail.verify.dirname, batch_id,
+                    tail.verify.label,
                 )
-                .select(
-                    F.col("doc_id_prev").alias("doc_id"),
-                    F.col("doc_id").alias("doc_id2"),
+                store_payload = _store_view(
+                    spark, payload_path, batch_id, schema=tail.verify.schema
                 )
-                .distinct()
-            )
-            pairs = pairs.unionByName(cross)
-            _require_payload_coverage(
-                sink_path, VECTORS_DIRNAME, batch_id, "embedding-verified"
-            )
-            store_vecs = _store_view(
-                spark,
-                vector_store_path(sink_path),
-                batch_id,
-                schema=_VECTOR_SCHEMA,
-            )
-            if store_vecs is not None:
-                vec_lookup = vecs.unionByName(store_vecs)
-        verified = _cosine_verify(pairs, vec_lookup, EMB_VERIFY_THRESHOLD)
-        drops = verified.select("doc_id2").distinct()
-        survivors = batch_df.join(
-            drops.withColumnRenamed("doc_id2", "vec_id"),
-            "vec_id",
-            "left_anti",
-        )
+        drops = _tail_drops(tail, band, payload, store_band, store_payload)
+        survivors = _anti(batch_df, drops, id_col)
+        if sink_transform is not None:
+            survivors = sink_transform(survivors)
         append_batch(survivors, sink_path, batch_id)
-        append_batch(
-            band.select("doc_id", "lang", "band", "band_key"),
-            bucket_store_path(sink_path),
-            batch_id,
-        )
-        append_batch(vecs, vector_store_path(sink_path), batch_id)
+        for path, rows in stores:
+            append_batch(rows, path, batch_id)
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
-            compact_bucket_store(spark, sink_path, below=batch_id)
-            compact_vector_store(spark, sink_path, below=batch_id)
+            for path, _rows in stores:
+                compact_store(spark, path, below=batch_id)
     finally:
-        band.unpersist()
-        vecs.unpersist()
+        for df in held:
+            df.unpersist()
 
 
-def ingest_with_verified_embedding_neardup(
-    stream: DataFrame,
-    sink_path: str,
-    checkpoint: str,
-    available_now: bool = True,
-    compact_every: int | None = None,
-) -> StreamingQuery:
-    """Streamed embeddings -> cosine-VERIFIED sign-bucket-deduped sink
-    (precision mode: bands nominate, the exact cosine decides)."""
-
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        verified_embedding_ingest_batch(
-            batch_df, sink_path, batch_id, compact_every=compact_every
-        )
-
-    writer = stream.writeStream.foreachBatch(handle).option(
-        "checkpointLocation", checkpoint
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def batch_verified_embedding_keep(emb: DataFrame) -> DataFrame:
-    """The BATCH statement of the embedding-verified streaming rule: a
-    vector survives iff NO smaller vec_id both shares a sign-bucket
-    band AND has exact cosine >= EMB_VERIFY_THRESHOLD with it. When a
-    stream replays the table in vec_id order, the verified sink must
-    equal this exactly (same candidate enumeration, same cosine on
-    the same vectors)."""
-    band = embedding_band_rows(emb)
-    pairs = _band_pairs_within(band)
-    vecs = emb.select(F.col("vec_id").alias("doc_id"), "embedding")
-    verified = _cosine_verify(pairs, vecs, EMB_VERIFY_THRESHOLD)
-    drops = verified.select(F.col("doc_id2").alias("vec_id")).distinct()
-    return emb.join(drops, "vec_id", "left_anti")
+def batch_dedup_keep(tail: Dedup, df: DataFrame, id_col: str) -> DataFrame:
+    """The BATCH statement of a dedup tail — the streaming rule run
+    against an empty store, one implementation (_tail_drops), so the
+    equivalence reference can never drift from what the ingest path
+    computes. A row survives iff no smaller id nominates it (shares a
+    bucket) and, for a verified tail, also passes the decision rule.
+    When a stream replays the frame in id order, the streamed sink must
+    equal this exactly (arrival order = id order makes 'earlier' and
+    'smaller' the same relation across and within batches)."""
+    band, payload = _tail_frames(tail, df, lambda f: f)
+    return _anti(df, _tail_drops(tail, band, payload, None, None), id_col)

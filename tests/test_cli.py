@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from etl_wikipedia_updates_spark.__main__ import main
 from etl_wikipedia_updates_spark.registry import REGISTRY
 
@@ -230,7 +232,7 @@ def test_cli_dedup_ingest(spark, sf_smoke, tmp_path, capsys):
 def test_cli_dedup_ingest_quality_mode(spark, sf_smoke, tmp_path, capsys):
     """--mode quality wires the quality-gate + dedup composition
     (corpus_release's streaming twin): the sink must equal the batch
-    statement batch_quality_neardup_keep exactly, and --compact-every
+    statement batch_keep('quality') exactly, and --compact-every
     must leave the bucket store folded into a snapshot version."""
     from pyspark.sql import functions as F
 
@@ -240,8 +242,8 @@ def test_cli_dedup_ingest_quality_mode(spark, sf_smoke, tmp_path, capsys):
         read_sink,
         sink_snapshot,
     )
+    from etl_wikipedia_updates_spark.streaming.decontam import batch_keep
     from etl_wikipedia_updates_spark.streaming.neardup import (
-        batch_quality_neardup_keep,
         bucket_store_path,
     )
     from etl_wikipedia_updates_spark.tables import load_table
@@ -270,7 +272,7 @@ def test_cli_dedup_ingest_quality_mode(spark, sf_smoke, tmp_path, capsys):
         return r["n"], r["s"]
 
     assert checksum(read_sink(spark, sink)) == checksum(
-        batch_quality_neardup_keep(docs)
+        batch_keep("quality", docs)
     )
     store = bucket_store_path(sink)
     assert sink_snapshot(store).current_version() is not None
@@ -325,14 +327,12 @@ def test_cli_maintain_compacts_sink_and_bucket_store(
 
 def test_cli_dedup_ingest_verified_mode(spark, sf_smoke, tmp_path, capsys):
     """--mode verified wires the precision pipeline: the sink equals
-    batch_verified_neardup_keep exactly."""
+    batch_keep('verified') exactly."""
     from pyspark.sql import functions as F
 
     from etl_wikipedia_updates_spark.sources.replay import write_replay_splits
     from etl_wikipedia_updates_spark.streaming.ingest import read_sink
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        batch_verified_neardup_keep,
-    )
+    from etl_wikipedia_updates_spark.streaming.decontam import batch_keep
     from etl_wikipedia_updates_spark.tables import load_table
 
     docs = load_table(spark, sf_smoke, "documents")
@@ -353,7 +353,7 @@ def test_cli_dedup_ingest_verified_mode(spark, sf_smoke, tmp_path, capsys):
         return r["n"], r["s"]
 
     assert checksum(read_sink(spark, sink)) == checksum(
-        batch_verified_neardup_keep(docs)
+        batch_keep("verified", docs)
     )
 
 
@@ -556,6 +556,28 @@ def test_cli_redact_pii_requires_curate_mode(spark, sf_smoke, tmp_path, capsys):
     )
     assert rc == 2
     assert "requires --mode curate" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [["--bench", "unused.parquet"], ["--decontam-mode", "spans"]],
+)
+def test_cli_veto_flags_require_a_veto_mode(tmp_path, capsys, flags):
+    """--bench and --decontam-mode configure the benchmark veto: with a
+    mode that runs no veto they exit 2 before any work starts, instead
+    of being silently ignored."""
+    rc = main(
+        [
+            "dedup-ingest",
+            "--replay", str(tmp_path / "replay"),
+            "--sink", str(tmp_path / "sink"),
+            "--mode", "doc",
+            *flags,
+        ]
+    )
+    assert rc == 2
+    assert "requires --mode decontam or curate" in capsys.readouterr().err
+    assert not os.path.exists(tmp_path / "sink")
 
 
 def test_cli_index_build_pq(spark, sf_smoke, tmp_path, capsys):
@@ -795,7 +817,7 @@ def test_cli_dedup_ingest_span_mode(spark, sf_smoke, tmp_path, capsys):
     exactly (replay arrives in doc_id order)."""
     from etl_wikipedia_updates_spark.sources.replay import write_replay_splits
     from etl_wikipedia_updates_spark.streaming.ingest import read_sink
-    from etl_wikipedia_updates_spark.streaming.neardup import batch_span_keep
+    from etl_wikipedia_updates_spark.streaming.decontam import batch_keep
     from etl_wikipedia_updates_spark.tables import load_table
 
     docs = load_table(spark, sf_smoke, "documents")
@@ -817,7 +839,7 @@ def test_cli_dedup_ingest_span_mode(spark, sf_smoke, tmp_path, capsys):
     assert "rows kept:" in capsys.readouterr().out
     assert sorted(
         r["doc_id"] for r in read_sink(spark, sink).collect()
-    ) == sorted(r["doc_id"] for r in batch_span_keep(docs).collect())
+    ) == sorted(r["doc_id"] for r in batch_keep("span", docs).collect())
 
 
 def test_cli_pack_shard_from_release(spark, sf_smoke, tmp_path, capsys):

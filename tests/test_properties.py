@@ -510,7 +510,7 @@ def _shingles3(tokens):
 @settings(max_examples=25, deadline=None,
           suppress_health_check=[HealthCheck.too_slow])
 def test_decontam_matches_python_reference(spark, corpus, bench):
-    """batch_decontam_keep == a from-scratch Python statement of the
+    """batch_keep('decontam') == a from-scratch Python statement of the
     rule: drop a doc iff it shares >= CONTAM_MIN_SHARED distinct
     3-token shingles with any single (df-capped) benchmark doc,
     self-pairs excluded per exclude_self. The tiny 10-token alphabet
@@ -518,9 +518,7 @@ def test_decontam_matches_python_reference(spark, corpus, bench):
     from etl_wikipedia_updates_spark.plans.northstar import (
         CONTAM_MIN_SHARED,
     )
-    from etl_wikipedia_updates_spark.streaming.decontam import (
-        batch_decontam_keep,
-    )
+    from etl_wikipedia_updates_spark.streaming.decontam import batch_keep
 
     docs_rows = [
         (i, "xx", " ".join(toks)) for i, toks in enumerate(corpus)
@@ -553,8 +551,8 @@ def test_decontam_matches_python_reference(spark, corpus, bench):
     for exclude_self in (True, False):
         got = {
             r["doc_id"]
-            for r in batch_decontam_keep(
-                docs_df, bench_df, exclude_self=exclude_self
+            for r in batch_keep(
+                "decontam", docs_df, bench_df, exclude_self=exclude_self
             ).collect()
         }
         assert got == expected_keep(exclude_self)

@@ -8,6 +8,9 @@ duckdb-hashed; SURVEY §5.2).
 
 from __future__ import annotations
 
+import os
+import shutil
+
 import pytest
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
@@ -15,6 +18,12 @@ from pyspark.sql import functions as F
 from etl_wikipedia_updates_spark.sources.replay import (
     read_replay_stream,
     write_replay_splits,
+)
+from etl_wikipedia_updates_spark.streaming.decontam import (
+    MODES,
+    batch_keep,
+    ingest_batch,
+    ingest_with_mode,
 )
 from etl_wikipedia_updates_spark.streaming.ingest import (
     ingest_with_retention,
@@ -622,50 +631,6 @@ def test_maintenance_skips_uncommitted_batch_dir(spark, events, tmp_path):
     assert _checksum(read_sink(spark, sink)) == _checksum(events.limit(120))
 
 
-def test_streaming_neardup_ingest_equals_batch(spark, tmp_path):
-    """S-style batch equivalence for ingest-time near-dup dedup: the
-    corpus replayed in doc_id order through ingest_with_neardup must
-    land exactly the docs the batch rule keeps (no smaller doc_id
-    shares any LSH bucket), and the rule must actually drop something
-    on this corpus. A second run over the same checkpoint replays
-    nothing and changes nothing (exactly-once)."""
-    from etl_wikipedia_updates_spark.sources.replay import (
-        read_replay_stream,
-        write_replay_splits,
-    )
-    from etl_wikipedia_updates_spark.streaming.ingest import read_sink
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        batch_neardup_keep,
-        ingest_with_neardup,
-    )
-    from etl_wikipedia_updates_spark.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    replay = str(tmp_path / "replay")
-    write_replay_splits(docs, replay, 5, "doc_id")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-
-    stream = read_replay_stream(spark, replay, docs.schema)
-    q = ingest_with_neardup(stream, sink, ckpt)
-    q.awaitTermination(300)
-
-    def checksum(df):
-        r = df.agg(
-            F.count("*").alias("n"), F.sum("doc_id").alias("s")
-        ).first()
-        return r["n"], r["s"]
-
-    expected = checksum(batch_neardup_keep(docs))
-    assert expected[0] < docs.count()  # the rule bites on this corpus
-    assert checksum(read_sink(spark, sink)) == expected
-
-    q2 = ingest_with_neardup(
-        read_replay_stream(spark, replay, docs.schema), sink, ckpt
-    )
-    q2.awaitTermination(300)
-    assert checksum(read_sink(spark, sink)) == expected
-
-
 def test_neardup_batch_replay_idempotent_and_blocks_later_dups(
     spark, tmp_path
 ):
@@ -675,94 +640,20 @@ def test_neardup_batch_replay_idempotent_and_blocks_later_dups(
     exact duplicates must collide with the stored buckets and land
     zero docs."""
     from etl_wikipedia_updates_spark.streaming.ingest import read_sink
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        dedup_ingest_batch,
-    )
     from etl_wikipedia_updates_spark.tables import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(100)
     sink = str(tmp_path / "sink")
 
-    dedup_ingest_batch(docs, sink, 0)
+    ingest_batch("doc", docs, None, sink, 0)
     first = read_sink(spark, sink).count()
     assert 0 < first <= 100
-    dedup_ingest_batch(docs, sink, 0)  # at-least-once replay, same id
+    ingest_batch("doc", docs, None, sink, 0)  # at-least-once replay, same id
     assert read_sink(spark, sink).count() == first
 
     copies = docs.withColumn("doc_id", F.col("doc_id") + 100000)
-    dedup_ingest_batch(copies, sink, 1)  # exact dups of batch 0
+    ingest_batch("doc", copies, None, sink, 1)  # exact dups of batch 0
     assert read_sink(spark, sink).count() == first
-
-
-def test_streaming_embedding_neardup_equals_batch(spark, tmp_path):
-    """Embedding-space (SemDeDup-style) ingest dedup: the embeddings
-    table replayed in vec_id order must land exactly the vectors the
-    batch sign-bucket rule keeps, and the rule must drop a small
-    nonzero fraction on this corpus."""
-    from etl_wikipedia_updates_spark.sources.replay import (
-        read_replay_stream,
-        write_replay_splits,
-    )
-    from etl_wikipedia_updates_spark.streaming.ingest import read_sink
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        batch_embedding_neardup_keep,
-        ingest_with_embedding_neardup,
-    )
-    from etl_wikipedia_updates_spark.tables import load_table
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    replay = str(tmp_path / "replay")
-    write_replay_splits(emb, replay, 4, "vec_id")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-
-    q = ingest_with_embedding_neardup(
-        read_replay_stream(spark, replay, emb.schema), sink, ckpt
-    )
-    q.awaitTermination(300)
-
-    def checksum(df):
-        r = df.agg(F.count("*").alias("n"), F.sum("vec_id").alias("s")).first()
-        return r["n"], r["s"]
-
-    expected = checksum(batch_embedding_neardup_keep(emb))
-    total = emb.count()
-    assert 0 < total - expected[0] < total * 0.2  # drops some, not most
-    assert checksum(read_sink(spark, sink)) == expected
-
-
-def test_streaming_quality_neardup_equals_batch(spark, tmp_path):
-    """The combined ingest pipeline (repetition quality gate -> near-dup
-    dedup) replayed in doc_id order must equal its batch statement, and
-    both stages must bite: fewer docs than dedup alone would keep."""
-    from etl_wikipedia_updates_spark.sources.replay import (
-        read_replay_stream,
-        write_replay_splits,
-    )
-    from etl_wikipedia_updates_spark.streaming.ingest import read_sink
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        batch_neardup_keep,
-        batch_quality_neardup_keep,
-        ingest_with_quality_neardup,
-    )
-    from etl_wikipedia_updates_spark.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    replay = str(tmp_path / "replay")
-    write_replay_splits(docs, replay, 4, "doc_id")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-
-    q = ingest_with_quality_neardup(
-        read_replay_stream(spark, replay, docs.schema), sink, ckpt
-    )
-    q.awaitTermination(300)
-
-    def checksum(df):
-        r = df.agg(F.count("*").alias("n"), F.sum("doc_id").alias("s")).first()
-        return r["n"], r["s"]
-
-    expected = checksum(batch_quality_neardup_keep(docs))
-    assert expected[0] < batch_neardup_keep(docs).count()  # quality bites
-    assert checksum(read_sink(spark, sink)) == expected
 
 
 def test_neardup_bucket_store_compaction(spark, tmp_path):
@@ -778,10 +669,8 @@ def test_neardup_bucket_store_compaction(spark, tmp_path):
     )
     from etl_wikipedia_updates_spark.streaming.neardup import (
         _store_view,
-        batch_neardup_keep,
         bucket_store_path,
-        compact_bucket_store,
-        dedup_ingest_batch,
+        compact_store,
         doc_band_rows,
     )
 
@@ -796,30 +685,30 @@ def test_neardup_bucket_store_compaction(spark, tmp_path):
     sink = str(tmp_path / "sink")
     store = bucket_store_path(sink)
     for k in range(4):
-        dedup_ingest_batch(part(k), sink, k)
+        ingest_batch("doc", part(k), None, sink, k)
     assert len(_batch_dirs(store)) == 4
 
     # Maintenance-form compaction: default folds everything below the
     # newest committed batch (one-batch replay grace horizon).
-    out = compact_bucket_store(spark, sink)
+    out = compact_store(spark, store)
     assert out == {"version": 1, "folded_dirs": 3}
     snap = sink_snapshot(store)
     assert int(snap.meta_for(1)["folded_through"]) == 2
     # Nothing new to fold -> no pointless full-store rewrite.
-    assert compact_bucket_store(spark, sink) is None
+    assert compact_store(spark, store) is None
 
     # A replay of the newest batch after the fold must not self-collide
     # (its own buckets stayed unfolded) nor duplicate output.
     before = _checksum_docs(read_sink(spark, sink))
-    dedup_ingest_batch(part(3), sink, 3)
+    ingest_batch("doc", part(3), None, sink, 3)
     assert _checksum_docs(read_sink(spark, sink)) == before
 
     # In-handler cadence: batch 4 compacts below itself (folds batch 3,
     # deletes the already-folded dirs one cycle late), batch 5 appends.
-    dedup_ingest_batch(part(4), sink, 4, compact_every=2)
-    dedup_ingest_batch(part(5), sink, 5)
+    ingest_batch("doc", part(4), None, sink, 4, compact_every=2)
+    ingest_batch("doc", part(5), None, sink, 5)
     assert _checksum_docs(read_sink(spark, sink)) == _checksum_docs(
-        batch_neardup_keep(docs)
+        batch_keep("doc", docs)
     )
     live = sorted(b for b, _ in _batch_dirs(store))
     assert live == [3, 4, 5]  # bounded: 3 live dirs after 6 batches
@@ -834,9 +723,35 @@ def _checksum_docs(df):
     return row["n"], row["s"]
 
 
+def test_streaming_neardup_ingest_equals_batch(spark, tmp_path):
+    """S-style batch equivalence for ingest-time near-dup dedup: the
+    unmodified corpus replayed in doc_id order through the doc mode,
+    with no store compaction, must land exactly the docs the batch
+    twin keeps (no smaller doc_id shares any LSH bucket), and the rule
+    must actually drop something on this corpus. A second run over the
+    same checkpoint replays nothing and changes nothing (exactly-once)."""
+    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    replay = str(tmp_path / "replay")
+    write_replay_splits(docs, replay, 5, "doc_id")
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+
+    def run():
+        ingest_with_mode(
+            "doc", read_replay_stream(spark, replay, docs.schema), None,
+            sink, ckpt,
+        ).awaitTermination(300)
+
+    run()
+    expected = _checksum_docs(batch_keep("doc", docs))
+    assert expected[0] < docs.count()  # the rule bites on this corpus
+    assert _checksum_docs(read_sink(spark, sink)) == expected
+    run()
+    assert _checksum_docs(read_sink(spark, sink)) == expected
+
+
 def test_streaming_neardup_compaction_equals_batch(spark, tmp_path):
-    """ingest_with_neardup(compact_every=2) over a 5-split replay:
-    result still equals the batch rule exactly, the store has folded
+    """The doc mode with compact_every=2 over a 5-split replay: result
+    still equals the batch twin exactly, the bucket store has folded
     into a snapshot version, and fewer live batch dirs remain than
     batches ran."""
     from etl_wikipedia_updates_spark.streaming.ingest import (
@@ -844,9 +759,7 @@ def test_streaming_neardup_compaction_equals_batch(spark, tmp_path):
         sink_snapshot,
     )
     from etl_wikipedia_updates_spark.streaming.neardup import (
-        batch_neardup_keep,
         bucket_store_path,
-        ingest_with_neardup,
     )
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
@@ -854,20 +767,227 @@ def test_streaming_neardup_compaction_equals_batch(spark, tmp_path):
     write_replay_splits(docs, replay, 5, "doc_id")
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
-    q = ingest_with_neardup(
-        read_replay_stream(spark, replay, docs.schema),
-        sink,
-        ckpt,
-        compact_every=2,
-    )
-    q.awaitTermination(300)
+    ingest_with_mode(
+        "doc", read_replay_stream(spark, replay, docs.schema), None,
+        sink, ckpt, compact_every=2,
+    ).awaitTermination(300)
 
     assert _checksum_docs(read_sink(spark, sink)) == _checksum_docs(
-        batch_neardup_keep(docs)
+        batch_keep("doc", docs)
     )
     store = bucket_store_path(sink)
     assert sink_snapshot(store).current_version() is not None
     assert len(_batch_dirs(store)) < 5
+
+
+def _mode_input(spark, sf, mode):
+    """(replayed frame, benchmark frame or None) of a curation mode:
+    its table under ``sf`` and, for a veto mode, the
+    CONTAM_BENCH_SOURCE slice (the CLI default)."""
+    from etl_wikipedia_updates_spark.plans.northstar import (
+        CONTAM_BENCH_SOURCE,
+    )
+
+    frame = load_table(spark, sf, MODES[mode].table)
+    if not MODES[mode].veto:
+        return frame, None
+    return frame, frame.filter(F.col("source") == CONTAM_BENCH_SOURCE)
+
+
+def _mode_stores(mode):
+    """Dir names of the state stores ``mode`` keeps under its sink."""
+    from etl_wikipedia_updates_spark.streaming.decontam import CONTAM_DIRNAME
+    from etl_wikipedia_updates_spark.streaming.neardup import BUCKETS_DIRNAME
+
+    spec = MODES[mode]
+    out = [CONTAM_DIRNAME] if spec.veto else []
+    if spec.dedup is not None:
+        out.append(BUCKETS_DIRNAME)
+        if spec.dedup.verify is not None:
+            out.append(spec.dedup.verify.dirname)
+    return out
+
+
+# mode -> what its kept count must also satisfy, given (kept, rows in,
+# replayed frame): an extra stage only drops, a verify pass only keeps
+_KEPT_BOUNDS = {
+    # the quality gate bites beyond dedup
+    "quality": lambda kept, n, f: kept < batch_keep("doc", f).count(),
+    "verified": lambda kept, n, f: kept >= batch_keep("doc", f).count(),
+    # sign-bucket blocking stays coarse (8-bit bands dropped 88%)
+    "embedding": lambda kept, n, f: n - kept < 0.2 * n,
+    "embedding-verified": (
+        lambda kept, n, f: kept >= batch_keep("embedding", f).count()
+    ),
+    "curate": lambda kept, n, f: kept <= batch_keep("quality", f).count(),
+}
+
+
+@pytest.mark.parametrize("mode", list(MODES))
+def test_mode_stream_equals_twin_exactly_once(spark, sf_smoke, tmp_path, mode):
+    """Every curation mode, its table (plus exact copies of ten rows
+    under new ids, so every dedup rule has something to drop) replayed
+    in id order over 5 batches with store compaction every 2, lands
+    exactly its batch twin (batch_keep: the same stages against an
+    empty store). The rule bites, and its kept count meets
+    _KEPT_BOUNDS; every store the mode keeps folded mid-stream; and a
+    second run over the same checkpoint replays nothing and changes
+    nothing (exactly-once)."""
+    from etl_wikipedia_updates_spark.streaming.ingest import (
+        _batch_dirs,
+        sink_snapshot,
+    )
+
+    spec = MODES[mode]
+    table, bench = _mode_input(spark, sf_smoke, mode)
+    idc = spec.id_col
+    first = sorted(r[0] for r in table.select(idc).collect())[:10]
+    frame = table.unionByName(
+        table.filter(F.col(idc).isin(first)).withColumn(idc, F.col(idc) + 10**6)
+    )
+    replay = str(tmp_path / "replay")
+    write_replay_splits(frame, replay, 5, idc)
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
+
+    def cks(df):
+        r = df.agg(F.count("*").alias("n"), F.sum(idc).alias("s"))
+        return tuple(r.first())
+
+    def run():
+        ingest_with_mode(
+            mode,
+            read_replay_stream(spark, replay, frame.schema),
+            bench,
+            sink,
+            ckpt,
+            compact_every=2,
+        ).awaitTermination(300)
+
+    run()
+    want = cks(batch_keep(mode, frame, bench))
+    n = frame.count()
+    assert want[0] < n  # the rule bites
+    assert _KEPT_BOUNDS.get(mode, lambda *a: True)(want[0], n, frame)
+    assert cks(read_sink(spark, sink)) == want
+    for dirname in _mode_stores(mode):
+        store = os.path.join(sink, dirname)
+        assert sink_snapshot(store).current_version() is not None
+        assert len(_batch_dirs(store)) < 5
+        assert read_sink(spark, store).count() > 0
+    run()  # same checkpoint: nothing left to replay
+    assert cks(read_sink(spark, sink)) == want
+
+
+class _Crash(Exception):
+    """The failure injected right after a driver side effect."""
+
+
+@pytest.mark.parametrize("mode", list(MODES))
+def test_mode_crash_after_each_side_effect_is_exactly_once(
+    spark, sf_smoke, tmp_path, monkeypatch, mode
+):
+    """The crash-point matrix: batch 1 of every mode crashes right
+    after each side effect the driver performs — the sink append, each
+    store append, each compaction publish (compact_every=1, so batch 1
+    folds batch 0) — and is then re-run under the same batch id, as
+    foreachBatch does after a restart. The sink must equal the mode's
+    twin, and every store must hold exactly the rows of a crash-free
+    run: no batch's rows twice, none lost. Driven through ingest_batch
+    directly on sf0.001 frames (no live query) to keep it cheap;
+    batch 1 carries exact copies of batch-0 rows, so the replay must
+    still find batch 0 in the (possibly just folded) stores."""
+    from etl_wikipedia_updates_spark.streaming import decontam as DC
+    from etl_wikipedia_updates_spark.streaming import neardup as ND
+    from etl_wikipedia_updates_spark.streaming.ingest import append_batch
+
+    spec = MODES[mode]
+    frame, bench = _mode_input(spark, sf_smoke, mode)
+    idc = spec.id_col
+    ids = sorted(r[0] for r in frame.select(idc).collect())
+    b0 = frame.filter(F.col(idc) < ids[30])
+    b1 = frame.filter((F.col(idc) >= ids[30]) & (F.col(idc) < ids[50]))
+    b1 = b1.unionByName(
+        frame.filter(F.col(idc) < ids[10]).withColumn(idc, F.col(idc) + 10**6)
+    )
+    bench_sh = None
+    if bench is not None:
+        bench_sh = DC.DECONTAM_MODES["shingles"][0](bench)
+    compact_store = ND.compact_store
+
+    def run(sink, batch, batch_id, crash_at=None):
+        """ingest_batch with every side effect reported to ``effects``
+        as it completes, raising _Crash right after effect ``crash_at``."""
+        effects = []
+
+        def done(kind, path):
+            effects.append((kind, os.path.basename(path)))
+            if len(effects) - 1 == crash_at:
+                raise _Crash(effects[-1])
+
+        def tapped_append(df, path, b):
+            append_batch(df, path, b)
+            done("append", path)
+
+        def tapped_compact(sp, path, *a, **k):
+            out = compact_store(sp, path, *a, **k)
+            done("compact", path)
+            return out
+
+        with monkeypatch.context() as m:
+            for mod in (DC, ND):
+                m.setattr(mod, "append_batch", tapped_append)
+            m.setattr(ND, "compact_store", tapped_compact)
+            ingest_batch(mode, batch, bench_sh, sink, batch_id, compact_every=1)
+        return effects
+
+    def ids_in(sink):
+        return sorted(r[0] for r in read_sink(spark, sink).select(idc).collect())
+
+    def store_rows(sink):
+        return {
+            d: sorted(str(r) for r in read_sink(spark, os.path.join(sink, d)).collect())
+            for d in _mode_stores(mode)
+        }
+
+    ref = str(tmp_path / "ref")
+    run(ref, b0, 0)
+    after0 = str(tmp_path / "after0")
+    shutil.copytree(ref, after0)
+    effects = run(ref, b1, 1)
+    kinds = {k for k, _ in effects}
+    assert kinds == {"append", "compact"}, effects
+    want_ids = sorted(
+        r[0]
+        for r in batch_keep(mode, b0.unionByName(b1), bench).select(idc).collect()
+    )
+    assert ids_in(ref) == want_ids
+    want_stores = store_rows(ref)
+    for i, effect in enumerate(effects):
+        sink = str(tmp_path / f"crash{i}")
+        shutil.copytree(after0, sink)
+        with pytest.raises(_Crash):
+            run(sink, b1, 1, crash_at=i)
+        run(sink, b1, 1)  # the replay of the crashed batch
+        assert ids_in(sink) == want_ids, effect
+        assert store_rows(sink) == want_stores, effect
+
+
+@pytest.mark.parametrize("mode", [m for m, s in MODES.items() if s.veto])
+def test_bench_frame_released_when_stream_fails_to_start(
+    spark, sf_smoke, tmp_path, mode
+):
+    """The benchmark frame is persisted for the life of the stream; a
+    start that raises (here: a batch frame where a stream belongs)
+    must release it, not leave a session-lifetime cache entry behind."""
+    from etl_wikipedia_updates_spark.streaming.decontam import bench_shingles
+
+    docs, bench = _mode_input(spark, sf_smoke, mode)
+    with pytest.raises(Exception, match="WRITE_STREAM_NOT_ALLOWED"):
+        ingest_with_mode(
+            mode, docs, bench, str(tmp_path / "sink"), str(tmp_path / "ckpt")
+        )
+    level = bench_shingles(bench).storageLevel
+    assert not (level.useMemory or level.useDisk), level
 
 
 def test_sink_invisible_before_first_commit(spark, tmp_path):
@@ -942,121 +1062,23 @@ def test_sink_row_count_maintained(spark, tmp_path):
     assert sink_row_count(sink) == 50
 
 
-def test_streaming_verified_neardup_equals_batch(spark, tmp_path):
-    """Precision-mode ingest dedup: the corpus replayed in doc_id
-    order through ingest_with_verified_neardup (with store compaction
-    mid-stream) must equal the batch statement — a doc drops only when
-    a smaller doc_id shares a band bucket AND exact shingle-Jaccard
-    clears the threshold. Verified must keep at least as many docs as
-    the aggressive band-blocking rule (collisions only nominate), and
-    both stores must have folded."""
-    from etl_wikipedia_updates_spark.streaming.ingest import (
-        _batch_dirs,
-        sink_snapshot,
-    )
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        batch_neardup_keep,
-        batch_verified_neardup_keep,
-        bucket_store_path,
-        ingest_with_verified_neardup,
-        shingle_store_path,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    replay = str(tmp_path / "replay")
-    write_replay_splits(docs, replay, 5, "doc_id")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-
-    q = ingest_with_verified_neardup(
-        read_replay_stream(spark, replay, docs.schema),
-        sink,
-        ckpt,
-        compact_every=2,
-    )
-    q.awaitTermination(300)
-
-    expected = _checksum_docs(batch_verified_neardup_keep(docs))
-    got = _checksum_docs(read_sink(spark, sink))
-    assert got == expected
-    n_all = docs.count()
-    n_aggressive = batch_neardup_keep(docs).count()
-    assert expected[0] < n_all  # the verified rule still bites
-    assert expected[0] >= n_aggressive  # precision: never drops more
-    for store in (bucket_store_path(sink), shingle_store_path(sink)):
-        assert sink_snapshot(store).current_version() is not None
-        assert len(_batch_dirs(store)) < 5
-
-
 def test_verified_batch_replay_idempotent(spark, tmp_path):
     """Replaying a verified batch under its own id must not verify
     against its own first attempt (both store reads exclude the
     current id) nor duplicate output; a later batch of exact copies
     verifies at jaccard 1.0 and lands zero docs."""
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        verified_ingest_batch,
-    )
-
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(100)
     sink = str(tmp_path / "sink")
 
-    verified_ingest_batch(docs, sink, 0)
+    ingest_batch("verified", docs, None, sink, 0)
     first = read_sink(spark, sink).count()
     assert 0 < first <= 100
-    verified_ingest_batch(docs, sink, 0)  # at-least-once replay
+    ingest_batch("verified", docs, None, sink, 0)  # at-least-once replay
     assert read_sink(spark, sink).count() == first
 
     copies = docs.withColumn("doc_id", F.col("doc_id") + 100000)
-    verified_ingest_batch(copies, sink, 1)  # exact dups: jaccard 1.0
+    ingest_batch("verified", copies, None, sink, 1)  # exact dups: jaccard 1.0
     assert read_sink(spark, sink).count() == first
-
-
-def test_streaming_verified_embedding_equals_batch(spark, tmp_path):
-    """Embedding precision-mode ingest: the embeddings table replayed
-    in vec_id order through ingest_with_verified_embedding_neardup
-    (with store compaction mid-stream) must equal the batch statement
-    — a vector drops only when a smaller vec_id shares a sign-bucket
-    band AND exact cosine clears the threshold. Verified keeps at
-    least as many vectors as the aggressive band-blocking rule, and
-    both stores fold."""
-    from etl_wikipedia_updates_spark.streaming.ingest import (
-        _batch_dirs,
-        sink_snapshot,
-    )
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        batch_embedding_neardup_keep,
-        batch_verified_embedding_keep,
-        bucket_store_path,
-        ingest_with_verified_embedding_neardup,
-        vector_store_path,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
-    replay = str(tmp_path / "replay")
-    write_replay_splits(emb, replay, 5, "vec_id")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-
-    q = ingest_with_verified_embedding_neardup(
-        read_replay_stream(spark, replay, emb.schema),
-        sink,
-        ckpt,
-        compact_every=2,
-    )
-    q.awaitTermination(300)
-
-    def cks(df):
-        row = df.agg(
-            F.count("*").alias("n"), F.sum("vec_id").alias("s")
-        ).first()
-        return row["n"], row["s"]
-
-    expected = cks(batch_verified_embedding_keep(emb))
-    got = cks(read_sink(spark, sink))
-    assert got == expected
-    n_aggressive = batch_embedding_neardup_keep(emb).count()
-    assert expected[0] >= n_aggressive  # precision: never drops more
-    for store in (bucket_store_path(sink), vector_store_path(sink)):
-        assert sink_snapshot(store).current_version() is not None
-        assert len(_batch_dirs(store)) < 5
 
 
 def test_verified_embedding_replay_idempotent(spark, tmp_path):
@@ -1064,21 +1086,17 @@ def test_verified_embedding_replay_idempotent(spark, tmp_path):
     verify against its own first attempt nor duplicate output; a later
     batch of exact vector copies verifies at cosine 1.0 and lands zero
     rows."""
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        verified_embedding_ingest_batch,
-    )
-
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").limit(100)
     sink = str(tmp_path / "sink")
 
-    verified_embedding_ingest_batch(emb, sink, 0)
+    ingest_batch("embedding-verified", emb, None, sink, 0)
     first = read_sink(spark, sink).count()
     assert 0 < first <= 100
-    verified_embedding_ingest_batch(emb, sink, 0)  # at-least-once replay
+    ingest_batch("embedding-verified", emb, None, sink, 0)  # replay
     assert read_sink(spark, sink).count() == first
 
     copies = emb.withColumn("vec_id", F.col("vec_id") + 100000)
-    verified_embedding_ingest_batch(copies, sink, 1)  # cosine 1.0 dups
+    ingest_batch("embedding-verified", copies, None, sink, 1)  # cosine 1.0
     assert read_sink(spark, sink).count() == first
 
 
@@ -1087,28 +1105,28 @@ def test_verified_modes_raise_without_payload_store(spark, tmp_path):
     with no shingle/vector payloads; continuing in a verified mode
     must raise instead of silently passing near-dups of unverifiable
     docs (the verify inner join would drop those candidate pairs)."""
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        _ingest_dedup_batch,
-        dedup_ingest_batch,
-        embedding_band_rows,
-        verified_embedding_ingest_batch,
-        verified_ingest_batch,
-    )
-
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(50)
     sink = str(tmp_path / "sink_doc")
-    dedup_ingest_batch(docs, sink, 0)  # unverified: no shingle store
+    ingest_batch("doc", docs, None, sink, 0)  # unverified: no shingle store
     with pytest.raises(RuntimeError, match="_shingle_store"):
-        verified_ingest_batch(
-            docs.withColumn("doc_id", F.col("doc_id") + 10000), sink, 1
+        ingest_batch(
+            "verified",
+            docs.withColumn("doc_id", F.col("doc_id") + 10000),
+            None,
+            sink,
+            1,
         )
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").limit(50)
     sink2 = str(tmp_path / "sink_emb")
-    _ingest_dedup_batch(emb, sink2, 0, embedding_band_rows, "vec_id")
+    ingest_batch("embedding", emb, None, sink2, 0)
     with pytest.raises(RuntimeError, match="_vector_store"):
-        verified_embedding_ingest_batch(
-            emb.withColumn("vec_id", F.col("vec_id") + 10000), sink2, 1
+        ingest_batch(
+            "embedding-verified",
+            emb.withColumn("vec_id", F.col("vec_id") + 10000),
+            None,
+            sink2,
+            1,
         )
 
 
@@ -1119,12 +1137,12 @@ def test_shingle_store_sketch_bounded(spark, tmp_path):
     tokens — the store would otherwise be a large fraction of the
     corpus at scale), and exact duplicates of long docs still verify
     at sketch-Jaccard 1.0 and drop."""
+    import os
+
     from etl_wikipedia_updates_spark.streaming.neardup import (
         SHINGLE_SKETCH_K,
+        SHINGLES_DIRNAME,
         doc_shingle_tid_arrays,
-        batch_verified_neardup_keep,
-        shingle_store_path,
-        verified_ingest_batch,
     )
 
     # 40 docs of ~1200 UNIQUE tokens each (>> K distinct shingles),
@@ -1151,14 +1169,14 @@ def test_shingle_store_sketch_bounded(spark, tmp_path):
     assert sizes["mx"] == SHINGLE_SKETCH_K  # capped despite ~1198 shingles
     assert sizes["mn"] == SHINGLE_SKETCH_K
 
-    kept = batch_verified_neardup_keep(docs)
+    kept = batch_keep("verified", docs)
     assert kept.count() == 40  # the 5 long-doc duplicates still drop
 
     # the persisted store rows carry the capped arrays too
     sink = str(tmp_path / "sink")
-    verified_ingest_batch(docs, sink, 0)
+    ingest_batch("verified", docs, None, sink, 0)
     stored = spark.read.parquet(
-        shingle_store_path(sink) + "/batch_0000000000"
+        os.path.join(sink, SHINGLES_DIRNAME, "batch_0000000000")
     )
     mx = stored.agg(F.max(F.size("toks")).alias("m")).first()["m"]
     assert mx == SHINGLE_SKETCH_K
@@ -1202,22 +1220,22 @@ def test_verified_guard_tolerates_lagging_payload_compaction(
     is healthy coverage and the next verified batch must proceed, not
     raise."""
     from etl_wikipedia_updates_spark.streaming.neardup import (
-        compact_bucket_store,
-        verified_ingest_batch,
+        bucket_store_path,
+        compact_store,
     )
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").limit(60)
     sink = str(tmp_path / "sink")
     b0 = docs.filter(F.col("doc_id") < 30)
     b1 = docs.filter(F.col("doc_id") >= 30)
-    verified_ingest_batch(b0, sink, 0)
-    verified_ingest_batch(b1, sink, 1)
+    ingest_batch("verified", b0, None, sink, 0)
+    ingest_batch("verified", b1, None, sink, 1)
     # simulate the crash window: bucket store folds, shingle store
     # never gets its turn
-    assert compact_bucket_store(spark, sink, below=2) is not None
+    assert compact_store(spark, bucket_store_path(sink), below=2) is not None
     # next batch verifies fine against the mixed folded/unfolded state
     b2 = docs.limit(10).withColumn("doc_id", F.col("doc_id") + 100000)
-    verified_ingest_batch(b2, sink, 2)  # exact dups of batch-0 docs
+    ingest_batch("verified", b2, None, sink, 2)  # exact dups of batch-0 docs
     # the copies verified against the folded buckets + unfolded
     # shingles and every one dropped
     assert (
@@ -1228,7 +1246,7 @@ def test_verified_guard_tolerates_lagging_payload_compaction(
 
 def test_streaming_decontam_equals_batch_and_quarantines(spark, tmp_path):
     """Ingest-time benchmark decontamination: the corpus replayed
-    through ingest_with_decontam must equal batch_decontam_keep (the
+    through the decontam mode must equal its batch twin (the
     operator is stateless per doc, so equality holds under any
     batching), the quarantine table must carry exactly the dropped
     docs' verdicts, sink + quarantine must partition the corpus, and
@@ -1238,9 +1256,7 @@ def test_streaming_decontam_equals_batch_and_quarantines(spark, tmp_path):
         CONTAM_BENCH_SOURCE,
     )
     from etl_wikipedia_updates_spark.streaming.decontam import (
-        batch_decontam_keep,
         contam_store_path,
-        ingest_with_decontam,
     )
     from etl_wikipedia_updates_spark.streaming.ingest import (
         _batch_dirs,
@@ -1253,7 +1269,8 @@ def test_streaming_decontam_equals_batch_and_quarantines(spark, tmp_path):
     write_replay_splits(docs, replay, 5, "doc_id")
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
-    q = ingest_with_decontam(
+    q = ingest_with_mode(
+        "decontam",
         read_replay_stream(spark, replay, docs.schema),
         bench,
         sink,
@@ -1263,7 +1280,7 @@ def test_streaming_decontam_equals_batch_and_quarantines(spark, tmp_path):
     q.awaitTermination(300)
 
     kept = read_sink(spark, sink)
-    expected = batch_decontam_keep(docs, bench)
+    expected = batch_keep("decontam", docs, bench)
     assert _checksum_docs(kept) == _checksum_docs(expected)
 
     quarantine = read_sink(spark, contam_store_path(sink))
@@ -1303,10 +1320,6 @@ def test_decontam_bench_cache_released_on_termination(spark, tmp_path):
     from etl_wikipedia_updates_spark.plans.northstar import (
         CONTAM_BENCH_SOURCE,
     )
-    from etl_wikipedia_updates_spark.streaming.decontam import (
-        ingest_with_decontam,
-    )
-
     def n_cached() -> int:
         return len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
 
@@ -1316,7 +1329,8 @@ def test_decontam_bench_cache_released_on_termination(spark, tmp_path):
     write_replay_splits(docs, replay, 3, "doc_id")
 
     base = n_cached()
-    q = ingest_with_decontam(
+    q = ingest_with_mode(
+        "decontam",
         read_replay_stream(spark, replay, docs.schema),
         bench,
         str(tmp_path / "sink"),
@@ -1333,10 +1347,6 @@ def test_decontam_bench_cache_released_on_termination(spark, tmp_path):
 def test_bench_shingle_cap_drops_boilerplate(spark):
     """A shingle present in more than ``cap`` benchmark docs is
     boilerplate and must not nominate matches."""
-    from etl_wikipedia_updates_spark.streaming.decontam import (
-        batch_decontam_keep,
-    )
-
     # every bench doc shares the same 5-token boilerplate run; each
     # train doc contains ONLY that run -> with cap=1 nothing matches,
     # with a high cap everything does
@@ -1351,57 +1361,11 @@ def test_bench_shingle_cap_drops_boilerplate(spark):
     )
     from etl_wikipedia_updates_spark.streaming import decontam as DC
 
-    kept_high = batch_decontam_keep(train, bench)
+    kept_high = batch_keep("decontam", train, bench)
     assert kept_high.count() == 0  # boilerplate matches under big cap
     sh_capped = DC.bench_shingles(bench, cap=1)
     drops = DC.decontam_verdicts(train, sh_capped)
     assert drops.count() == 0  # capped: boilerplate can't nominate
-
-
-def test_streaming_full_curation_equals_batch(spark, tmp_path):
-    """The one-pass curation ingest (quality gate -> benchmark veto ->
-    near-dup dedup) replayed in doc_id order must equal the composed
-    batch statement, quarantine its contaminated docs, and keep
-    strictly fewer docs than any single stage alone."""
-    from etl_wikipedia_updates_spark.plans.northstar import (
-        CONTAM_BENCH_SOURCE,
-    )
-    from etl_wikipedia_updates_spark.streaming.decontam import (
-        batch_full_curation_keep,
-        contam_store_path,
-        ingest_with_full_curation,
-    )
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        batch_quality_neardup_keep,
-        bucket_store_path,
-    )
-    from etl_wikipedia_updates_spark.streaming.ingest import sink_snapshot
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    bench = docs.filter(F.col("source") == CONTAM_BENCH_SOURCE)
-    replay = str(tmp_path / "replay")
-    write_replay_splits(docs, replay, 5, "doc_id")
-    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
-
-    q = ingest_with_full_curation(
-        read_replay_stream(spark, replay, docs.schema),
-        bench,
-        sink,
-        ckpt,
-        compact_every=2,
-    )
-    q.awaitTermination(300)
-
-    expected = batch_full_curation_keep(docs, bench)
-    assert _checksum_docs(read_sink(spark, sink)) == _checksum_docs(expected)
-    # curation with the extra veto keeps no more than quality+dedup
-    n_full = expected.count()
-    assert 0 < n_full <= batch_quality_neardup_keep(docs).count()
-    # quarantine holds the vetoed docs; both stores folded mid-stream
-    assert read_sink(spark, sink, ).count() == n_full
-    assert read_sink(spark, contam_store_path(sink)).count() > 0
-    for store in (contam_store_path(sink), bucket_store_path(sink)):
-        assert sink_snapshot(store).current_version() is not None
 
 
 def test_decontam_external_bench_id_collision_not_bypassed(spark):
@@ -1410,10 +1374,6 @@ def test_decontam_external_bench_id_collision_not_bypassed(spark):
     collide with the matching benchmark doc's id — the self-pair
     exclusion is only valid for the in-table id-shared slice, where
     it must still keep the benchmark's own rows."""
-    from etl_wikipedia_updates_spark.streaming.decontam import (
-        batch_decontam_keep,
-    )
-
     text = "alpha beta gamma delta epsilon zeta eta theta"
     bench = spark.createDataFrame(
         [(7, "xx", text)], "doc_id long, lang string, text string"
@@ -1423,10 +1383,10 @@ def test_decontam_external_bench_id_collision_not_bypassed(spark):
         "doc_id long, lang string, text string",
     )
     # external semantics: id 7 is a coincidence, the copy must drop
-    kept_ext = batch_decontam_keep(corpus, bench, exclude_self=False)
+    kept_ext = batch_keep("decontam", corpus, bench, exclude_self=False)
     assert {r["doc_id"] for r in kept_ext.collect()} == {8}
     # in-table semantics: row 7 IS the benchmark row; keep it
-    kept_sub = batch_decontam_keep(corpus, bench, exclude_self=True)
+    kept_sub = batch_keep("decontam", corpus, bench, exclude_self=True)
     assert {r["doc_id"] for r in kept_sub.collect()} == {7, 8}
 
 
@@ -1737,9 +1697,9 @@ def test_static_temp_rates_is_materialized(spark):
 
 
 def test_streaming_span_decontam_equals_batch_and_audit(spark, tmp_path):
-    """SPAN mode (r16): the corpus replayed through
-    ingest_with_decontam(mode='spans') must equal
-    batch_decontam_keep(mode='spans') under multi-batch replay, and
+    """SPAN mode (r16): the corpus replayed through the decontam mode
+    with decontam_mode='spans' must equal its batch twin under
+    multi-batch replay, and
     the dropped TRAIN ids must be exactly the docs the registered
     span_decontam audit counts as contaminated (contam_doc > 0) — the
     stream, the batch rule, and the batch audit are three statements
@@ -1749,9 +1709,7 @@ def test_streaming_span_decontam_equals_batch_and_audit(spark, tmp_path):
         span_decontam,
     )
     from etl_wikipedia_updates_spark.streaming.decontam import (
-        batch_decontam_keep,
         contam_store_path,
-        ingest_with_decontam,
     )
 
     sf = "/root/testdata/sf0.001"
@@ -1761,17 +1719,18 @@ def test_streaming_span_decontam_equals_batch_and_audit(spark, tmp_path):
     write_replay_splits(docs, replay, 4, "doc_id")
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
-    q = ingest_with_decontam(
+    q = ingest_with_mode(
+        "decontam",
         read_replay_stream(spark, replay, docs.schema),
         bench,
         sink,
         ckpt,
-        mode="spans",
+        decontam_mode="spans",
     )
     q.awaitTermination(300)
 
     kept = read_sink(spark, sink)
-    expected = batch_decontam_keep(docs, bench, mode="spans")
+    expected = batch_keep("decontam", docs, bench, decontam_mode="spans")
     assert _checksum_docs(kept) == _checksum_docs(expected)
 
     # dropped TRAIN ids == the registered audit's contaminated docs
@@ -1795,16 +1754,22 @@ def test_streaming_span_decontam_equals_batch_and_audit(spark, tmp_path):
 
 
 def test_decontam_mode_rejects_unknown(spark):
-    from etl_wikipedia_updates_spark.streaming.decontam import (
-        batch_decontam_keep,
-    )
-
+    """Unknown veto rules and curation modes raise, and so does a stage
+    setting the mode does not run (never a silent no-op)."""
     docs = spark.createDataFrame(
         [(1, "a b", "en", "s", 3)],
         "doc_id long, text string, lang string, source string, n_chars long",
     )
     with pytest.raises(ValueError, match="unknown decontam mode"):
-        batch_decontam_keep(docs, docs, mode="hashes")
+        batch_keep("decontam", docs, docs, decontam_mode="hashes")
+    with pytest.raises(ValueError, match="unknown curation mode"):
+        batch_keep("hashes", docs)
+    with pytest.raises(ValueError, match="does not run the stage"):
+        batch_keep("doc", docs, redact_pii=True)
+    with pytest.raises(ValueError, match="does not run the stage"):
+        batch_keep("quality", docs, docs)
+    with pytest.raises(ValueError, match="runs the benchmark veto"):
+        batch_keep("curate", docs)
 
 
 def test_streaming_full_curation_span_mode_equals_batch(spark, tmp_path):
@@ -1854,7 +1819,7 @@ def test_span_neardup_stream_equals_batch_and_shadows(spark, tmp_path):
     """Span-mode ingest (r17, the sixth dedup-ingest variant): a doc
     lands iff none of its SPAN_W-token spans was seen from an earlier
     doc. Streamed in doc_id order over 5 batches == the batch rule
-    (batch_span_keep, shared batch_neardup_drops engine); a replay
+    (batch_keep('span'), shared batch_neardup_drops engine); a replay
     over the same checkpoint changes nothing; a DROPPED doc's spans
     still shadow later arrivals (first-arriver rule); and the rule
     composes with the incremental story: the sink's span set drives
@@ -1865,10 +1830,6 @@ def test_span_neardup_stream_equals_batch_and_shadows(spark, tmp_path):
         write_replay_splits,
     )
     from etl_wikipedia_updates_spark.streaming.ingest import read_sink
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        batch_span_keep,
-        ingest_with_span_neardup,
-    )
 
     def blk(name):
         return " ".join(f"{name}t{i}" for i in range(8))
@@ -1891,8 +1852,8 @@ def test_span_neardup_stream_equals_batch_and_shadows(spark, tmp_path):
     write_replay_splits(docs, replay, 5, "doc_id")
     sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt")
 
-    q = ingest_with_span_neardup(
-        read_replay_stream(spark, replay, docs.schema), sink, ckpt
+    q = ingest_with_mode(
+        "span", read_replay_stream(spark, replay, docs.schema), None, sink, ckpt
     )
     q.awaitTermination(300)
 
@@ -1900,13 +1861,13 @@ def test_span_neardup_stream_equals_batch_and_shadows(spark, tmp_path):
         r["doc_id"] for r in read_sink(spark, sink).collect()
     )
     kept_batch = sorted(
-        r["doc_id"] for r in batch_span_keep(docs).collect()
+        r["doc_id"] for r in batch_keep("span", docs).collect()
     )
     assert kept_stream == kept_batch == [0, 3, 5]  # 2 shadowed by 1
 
     # replay idempotence
-    q2 = ingest_with_span_neardup(
-        read_replay_stream(spark, replay, docs.schema), sink, ckpt
+    q2 = ingest_with_mode(
+        "span", read_replay_stream(spark, replay, docs.schema), None, sink, ckpt
     )
     q2.awaitTermination(300)
     assert sorted(
@@ -1930,7 +1891,6 @@ def test_span_ingest_seeded_from_release_store(spark, tmp_path):
     )
     from etl_wikipedia_updates_spark.streaming.ingest import read_sink
     from etl_wikipedia_updates_spark.streaming.neardup import (
-        ingest_with_span_neardup,
         seed_span_store_from,
     )
 
@@ -1967,8 +1927,8 @@ def test_span_ingest_seeded_from_release_store(spark, tmp_path):
 
     replay = str(tmp_path / "replay")
     write_replay_splits(new, replay, 3, "doc_id")
-    q = ingest_with_span_neardup(
-        read_replay_stream(spark, replay, new.schema), sink, ckpt
+    q = ingest_with_mode(
+        "span", read_replay_stream(spark, replay, new.schema), None, sink, ckpt
     )
     q.awaitTermination(300)
     kept = sorted(r["doc_id"] for r in read_sink(spark, sink).collect())
@@ -1992,7 +1952,7 @@ def test_seeded_span_ingest_resumes_cleanly(spark, tmp_path):
     import os
 
     from etl_wikipedia_updates_spark.streaming.neardup import (
-        compact_bucket_store,
+        compact_store,
         doc_span_rows,
         seeded_from,
     )
@@ -2024,7 +1984,7 @@ def test_seeded_span_ingest_resumes_cleanly(spark, tmp_path):
     )
     append_batch(doc_span_rows(batch), bucket_store_path(sink), 0)
     append_batch(doc_span_rows(batch), bucket_store_path(sink), 1)
-    assert compact_bucket_store(spark, sink, below=1) is not None
+    assert compact_store(spark, bucket_store_path(sink), below=1) is not None
     snap2 = sink_snapshot(bucket_store_path(sink))
     assert "seeded_from" not in snap2.meta_for(snap2.current_version())
     assert seeded_from(sink) == marker  # sidecar unaffected

@@ -49,6 +49,11 @@ from etl_wikipedia_updates_spark.sources.replay import (
     read_replay_stream,
     write_replay_splits,
 )
+from etl_wikipedia_updates_spark.streaming.decontam import (
+    DECONTAM_MODES,
+    MODES,
+    ingest_with_mode,
+)
 from etl_wikipedia_updates_spark.streaming.ingest import (
     ingest_with_retention,
     read_sink,
@@ -59,55 +64,20 @@ WIKIMEDIA_EV_S = 40  # upper end of the publicly observed SSE rate
 N_SPLITS = 8  # micro-batches; each batch pays trigger+commit overhead
 TIMEOUT_S = 600
 
-# mode -> (replayed table, split/order key, one-line cost note);
-# starters bind in main() once the static frames exist
-MODE_SPECS: dict[str, tuple[str, str, str]] = {
-    "neardup": (
-        "documents",
-        "doc_id",
-        "shingle+MinHash per batch + bucket-store collision join",
-    ),
-    "quality": (
-        "documents",
-        "doc_id",
-        "quality gate, then the MinHash dedup path",
-    ),
-    "verified": (
-        "documents",
-        "doc_id",
-        "MinHash nomination + exact bottom-k Jaccard verify",
-    ),
-    "span": (
-        "documents",
-        "doc_id",
-        "exact-substring veto: span hashes ARE the store rows",
-    ),
-    "embedding": (
-        "embeddings",
-        "vec_id",
-        "sign-bucket (SimHash band) blocking over the embedding column",
-    ),
-    "embedding_verified": (
-        "embeddings",
-        "vec_id",
-        "sign-bucket nomination + exact cosine verify",
-    ),
-    "decontam_shingle": (
-        "documents",
-        "doc_id",
-        "benchmark shingle-overlap veto (batch `contamination` rule)",
-    ),
-    "decontam_span": (
-        "documents",
-        "doc_id",
-        "benchmark exact-substring veto (batch `span_decontam` rule)",
-    ),
-    "curate": (
-        "documents",
-        "doc_id",
-        "one-pass quality + decontam + near-dup curation ingest",
-    ),
-}
+
+def bench_runs() -> dict[str, tuple[str, str]]:
+    """run name -> (curation mode, veto rule) for every measured
+    replay: each MODES entry once, and the veto-only mode once per veto
+    rule. Run names keep the STREAMBENCH metric names (``neardup`` is
+    the doc mode)."""
+    runs = {}
+    for mode, spec in MODES.items():
+        name = "neardup" if mode == "doc" else mode.replace("-", "_")
+        if spec.veto and spec.dedup is None:
+            runs.update({f"{name}_{r[:-1]}": (mode, r) for r in DECONTAM_MODES})
+        else:
+            runs[name] = (mode, "shingles")
+    return runs
 
 
 def _await_or_die(q, what: str) -> None:
@@ -122,15 +92,18 @@ def _await_or_die(q, what: str) -> None:
         )
 
 
-def _replay_frame(spark, frame, key, start, what: str):
-    """Replay ``frame`` (split/ordered on ``key``) through an ingest
-    starter; return (elapsed_sec, rows_kept)."""
+def _replay_frame(spark, frame, key, mode, bench, rule, what: str):
+    """Replay ``frame`` (split/ordered on ``key``) through curation
+    ``mode``; return (elapsed_sec, rows_kept)."""
     with tempfile.TemporaryDirectory() as tmp:
         replay = f"{tmp}/replay"
         write_replay_splits(frame, replay, N_SPLITS, key)
         stream = read_replay_stream(spark, replay, frame.schema)
         t0 = time.perf_counter()
-        q = start(stream, f"{tmp}/sink", f"{tmp}/ckpt")
+        q = ingest_with_mode(
+            mode, stream, bench, f"{tmp}/sink", f"{tmp}/ckpt",
+            decontam_mode=rule,
+        )
         _await_or_die(q, what)
         elapsed = time.perf_counter() - t0
         kept = read_sink(spark, f"{tmp}/sink").count()
@@ -143,19 +116,6 @@ def main() -> None:
     from etl_wikipedia_updates_spark.plans.northstar import (
         CONTAM_BENCH_SOURCE,
     )
-    from etl_wikipedia_updates_spark.streaming.decontam import (
-        ingest_with_decontam,
-        ingest_with_full_curation,
-    )
-    from etl_wikipedia_updates_spark.streaming.neardup import (
-        ingest_with_embedding_neardup,
-        ingest_with_neardup,
-        ingest_with_quality_neardup,
-        ingest_with_span_neardup,
-        ingest_with_verified_embedding_neardup,
-        ingest_with_verified_neardup,
-    )
-
     ap = argparse.ArgumentParser()
     ap.add_argument("sf_dir", nargs="?", default="/root/testdata/sf0.1")
     ap.add_argument(
@@ -164,9 +124,10 @@ def main() -> None:
         help="also write the combined JSON object here "
         "(STREAMBENCH_r{N}.json per-round artifact)",
     )
+    runs = bench_runs()
     ap.add_argument(
         "--modes",
-        default=",".join(MODE_SPECS),
+        default=",".join(runs),
         help="comma-separated mode subset — documents modes plus the "
         "embedding/embedding_verified embeddings-table modes "
         "(default: all)",
@@ -174,7 +135,7 @@ def main() -> None:
     args = ap.parse_args()
     sf_dir = args.sf_dir
     selected = [m for m in args.modes.split(",") if m]
-    unknown = set(selected) - set(MODE_SPECS)
+    unknown = set(selected) - set(runs)
     if unknown:
         raise SystemExit(f"unknown modes: {sorted(unknown)}")
 
@@ -212,11 +173,12 @@ def main() -> None:
         }
     )
 
+    specs = {name: MODES[runs[name][0]] for name in selected}
     frames = {
-        name: load_table(spark, sf_dir, name)
-        for name in {MODE_SPECS[m][0] for m in selected}
+        table: load_table(spark, sf_dir, table)
+        for table in {spec.table for spec in specs.values()}
     }
-    counts = {name: f.count() for name, f in frames.items()}
+    counts = {table: f.count() for table, f in frames.items()}
     docs = frames.get("documents")
     # held-out benchmark slice, the same convention the batch
     # contamination query and the CLI --mode decontam default declare;
@@ -226,39 +188,29 @@ def main() -> None:
         if docs is not None
         else None
     )
-    starters = {
-        "neardup": ingest_with_neardup,
-        "quality": ingest_with_quality_neardup,
-        "verified": ingest_with_verified_neardup,
-        "span": ingest_with_span_neardup,
-        "embedding": ingest_with_embedding_neardup,
-        "embedding_verified": ingest_with_verified_embedding_neardup,
-        "decontam_shingle": lambda s, sink, ck: ingest_with_decontam(
-            s, bench, sink, ck, mode="shingles"
-        ),
-        "decontam_span": lambda s, sink, ck: ingest_with_decontam(
-            s, bench, sink, ck, mode="spans"
-        ),
-        "curate": lambda s, sink, ck: ingest_with_full_curation(
-            s, bench, sink, ck
-        ),
-    }
-    for mode in selected:
-        table, key, note = MODE_SPECS[mode]
+    for name in selected:
+        mode, rule = runs[name]
+        spec = specs[name]
         elapsed, kept = _replay_frame(
-            spark, frames[table], key, starters[mode], f"{mode}_ingest"
+            spark,
+            frames[spec.table],
+            spec.id_col,
+            mode,
+            bench if spec.veto else None,
+            rule,
+            f"{name}_ingest",
         )
         emit(
             {
-                "metric": f"{mode}_ingest_docs_per_sec",
-                "value": round(counts[table] / elapsed, 1),
+                "metric": f"{name}_ingest_docs_per_sec",
+                "value": round(counts[spec.table] / elapsed, 1),
                 "unit": "docs/sec",
-                "table": table,
-                "docs_in": counts[table],
+                "table": spec.table,
+                "docs_in": counts[spec.table],
                 "docs_kept": kept,
                 "elapsed_sec": round(elapsed, 2),
                 "micro_batches": N_SPLITS,
-                "note": note,
+                "mode": mode,
                 "sf": sf_dir,
             }
         )
